@@ -1,15 +1,20 @@
 """IO layer: scans, sinks, and the testdata table loader.
 
-Reference parity (SURVEY.md §2.A ops 1-2):
+Reference parity (SURVEY.md §2.A ops 1-2), for library callers holding
+a DataFrame:
 
 - WRITE (``Client/client_v1.py:75-142``: split text by line count into N
-  partitions, pad empties, register in catalog) → :func:`write_text` with
-  an explicit partition count. Spark's ``part-*`` file naming matches the
+  partitions, pad empties) → :func:`write_text` with an explicit
+  partition count. Spark's ``part-*`` file naming matches the
   reference's ``{name}-part-00000_{i}`` convention
   (``Worker/worker_v1.py:193``) natively.
-- READ (``Client/client_v1.py:144-176``: gather all partitions, merge in
-  manifest order) → :func:`read_text`; single-file gather is
-  ``coalesce(1)`` at write time, never a driver-side collect.
+- READ (``Client/client_v1.py:144-176``: gather all partitions) →
+  :func:`read_text`; ``write_text(single_file=True)`` writes a
+  ``coalesce(1)`` single-file gather without a driver-side collect.
+
+The CLI's ``-w`` / ``-r`` verbs (``cli.py``) do not come through here:
+like the reference's client they split and merge local files on the
+client, byte for byte, with no Spark job.
 
 Scale notes: parquet scans get predicate pushdown + column pruning from
 Catalyst for free; ``maxPartitionBytes`` (session.py) sizes scan splits
