@@ -276,6 +276,15 @@ def build_ivfpq_index(
     across runs and partitionings, never ``rand()``. Caller contract:
     f·n must comfortably exceed max(n_centroids, k)·(a few).
 
+    Reproducibility: "spark.ml, fixed seed" gives the same coarse
+    centroids and codebooks only for the same input PARTITIONING —
+    spark.ml's k-means|| initialisation draws per partition, so the
+    same rows split another way (``createDataFrame`` of a local list
+    splits by the session's default parallelism) fit other quantizers
+    and move recall. The ``fit_fraction`` sample itself is
+    partition-independent; :func:`build_ivfpq_index_lloyd` is the
+    builder whose quantizers do not depend on the partitioning.
+
     ``by_residual``: quantize PQ over x − c(x) instead of x — the FAISS
     IVFADC default. The coarse cells absorb the low-frequency component
     so the m×8-bit budget spends on the fine structure. Measured on the

@@ -72,7 +72,11 @@ def _fit_books(
     flat PQ, coarse residuals for by-residual IVF-PQ): m bounded
     spark.ml KMeans fits, one per dim/m-wide slice. Returned model
     state is m×k×(dim/m) floats on the driver — the k-means centroid
-    contract. dim must be divisible by m (fails loudly)."""
+    contract. dim must be divisible by m (fails loudly). The fixed
+    per-slice seeds reproduce the codebooks only for the same input
+    partitioning: spark.ml's k-means|| initialisation draws per
+    partition (the deterministic, partition-independent fit is the
+    Lloyd builder, ``ivfpq.build_ivfpq_index_lloyd``)."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
