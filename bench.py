@@ -323,15 +323,10 @@ def _touch_files(path: str) -> float:
 
 
 def _ivf_probe(spark, dst: str, reps: int) -> dict[str, float]:
-    """IVF batch probe at k=256 centroids — the standing guard for the
-    r8 k-independence fix (operators/ann_index.py: centroid ranking
-    switches from literal expression trees to a broadcast join against
-    the k-row centroid table above MAX_LITERAL_CENTROIDS — 32 since
-    the r11 measurement; see the constant's comment).
-
-    tools/ivf_k256_probe.py proved the design once (k=256: literal form
-    13.0 s plan-build vs 1.6 s join form); the equality pin guards
-    correctness but nothing guarded the LATENCY — this row does. Index
+    """IVF batch probe at k=256 centroids — the standing latency guard
+    for centroid routing at large k (operators/ann_index.py: every
+    routing site ranks the centroid list folded into ONE plan constant,
+    so plan size does not grow as k×d expression trees). Index
     over the 10× embeddings replica (vectors rolled per replica so
     k-means sees distinct points), built once and fingerprint-guarded
     like the skew probe; the recurring numbers are plan-build (call →

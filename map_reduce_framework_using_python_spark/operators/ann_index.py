@@ -1084,8 +1084,8 @@ def lsh_probe_index_batch(
     # No matching unpersist: the RETURNED plan still reads `probes`, so
     # an eager unpersist would recompute the lineage at action time and
     # reintroduce the desync. Default storage is MEMORY_AND_DISK; the
-    # ContextCleaner reclaims the blocks once the caller drops the
-    # returned frame (the curate_batch-documented pattern, r8 advice).
+    # CacheManager keeps the entry until an explicit unpersist
+    # (plans/core.py), so each call leaves one.
     probes = probes.persist()
     # Bounded driver collect: LIMIT cap+1 so a pathological batch can
     # never materialize an unbounded IN-list (or driver row set) — the
@@ -1135,116 +1135,50 @@ def lsh_probe_index_batch(
     )
 
 
-def _centroid_dist_structs(qv_sql: str, centroids: list[list[float]]):
-    """(squared-distance, cid) structs for every persisted centroid —
-    sorts lexicographically: nearest first, lowest cid as the
-    deterministic tie-break (the JVM twin of the driver-side
-    ``sorted(range(k), key=dist)`` in :func:`ivf_topk_indexed`). The
-    centroid list is meta-sized, so this is constant work per row.
-    Shared by the batch probe (rank n_probe nearest) and the append
-    path (argmin assignment) so routing and storage always agree.
-
-    r15 (guide §1.2 step 2 / the assign_clusters generated-SQL
-    discipline): the expression is built as ONE parsed SQL string
-    instead of k×d Column-API literal calls — at k=16, d=64 the old
-    form cost ~2,100 Py4J round trips, 0.59 s of every probe plan
-    build; the parse produces the identical fold/struct tree (same
-    arithmetic, same double literals via shortest round-trip repr), so
-    routing and scores are unchanged. ``qv_sql`` is the query-vector
-    expression as SQL text (callers pass a resolved column name or a
-    transform(...) cast)."""
-    parts = []
+def _centroids_sql(centroids: list[list[float]]) -> str:
+    """The centroid list as ONE SQL constant ``C``: ``from_json`` over a
+    JSON string literal, one ``(cid, cv)`` struct per centroid with
+    ``cid`` its position in the persisted list. Its only input is a
+    literal, so the optimizer folds the call into a single array
+    literal — the plan does not grow k×d expression trees and no
+    broadcast job ships the centroids. JSON floats are Python's
+    shortest round-trip ``repr`` and the JSON parser rounds correctly,
+    so every ``cv`` holds the persisted doubles bit for bit. JSON has
+    no NaN or infinity, so a non-finite coordinate raises
+    ``ValueError`` when the plan is built."""
+    rows = []
     for i, c in enumerate(centroids):
-        arr = ", ".join(_dlit(x) for x in c)
-        parts.append(
-            f"named_struct('dist', aggregate(zip_with({qv_sql}, "
-            f"array({arr}), (a, b) -> (a - b) * (a - b)), 0D, "
-            f"(acc, x) -> acc + x), 'cid', {int(i)})"
-        )
-    return F.expr("array(" + ", ".join(parts) + ")")
+        cv = [float(x) for x in c]
+        for x in cv:
+            if not math.isfinite(x):
+                raise ValueError(f"non-finite centroid coordinate: {x}")
+        rows.append({"cid": i, "cv": cv})
+    js = json.dumps(rows, separators=(",", ":"))
+    return f"from_json('{js}', 'array<struct<cid:int,cv:array<double>>>')"
 
 
-def _dlit(x: float) -> str:
-    """A SQL DOUBLE literal that parses back to exactly ``x`` (Python's
-    repr is the shortest round-tripping decimal form)."""
-    x = float(x)
-    if x != x or x in (float("inf"), float("-inf")):
-        raise ValueError(f"non-finite centroid coordinate: {x}")
-    return f"CAST('{x!r}' AS DOUBLE)" if repr(x)[0] == "-" else f"{x!r}D"
-
-
-#: Centroid counts up to this use the literal array-of-structs ranking
-#: (zero extra shuffle); above it the probe switches to the broadcast
-#: centroid-table join, whose PLAN SIZE is k-independent. At 100 TB
-#: k ≈ √n is thousands, and a k×d literal array embedded in the plan
-#: recreates the wide-literal plan-build pathology round 7 root-caused
-#: (per-element expression trees dominate latency long before
-#: execution starts) — the join form ships centroids as DATA.
-#: Lowered 64 → 32 in r11 on direct measurement over the 10× replica
-#: (64-query batch, best-of-3 warm): at k=64 the literal form costs
-#: 4.9 s plan-build vs 1.5 s for the join form (3×), and even at k=16
-#: the join form is no slower (0.87 s vs 1.16 s plan, exec within
-#: noise) — the literal path's zero-extra-shuffle advantage never
-#: materializes because the rank shuffle moves only skinny
-#: (q_id, cid, dist) rows. Kept at 32 (not 0) so the small-k
-#: oracle-pinned probes (IVF lloyd k=8, IVF-PQ lloyd k=4, IVF k=16)
-#: keep their frozen single-shuffle plan shapes.
-MAX_LITERAL_CENTROIDS = 32
-
-
-def _centroid_frame(spark: SparkSession, centroids: list[list[float]]) -> DataFrame:
-    """The persisted centroid table as a k-row DataFrame (cid, cvec) —
-    data, not plan literals, so broadcast cost is k·d doubles on the
-    wire and the plan itself stays constant-size in k."""
-    return spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cid long, cvec array<double>",
-    )
-
-
-def _nearest_centroids_join(
-    spark: SparkSession,
-    qframe: DataFrame,
-    centroids: list[list[float]],
-    n_probe: int,
-) -> DataFrame:
-    """(q_id, centroid_id) pairs for each query's ``n_probe`` nearest
-    persisted centroids, via a broadcast join against the centroid
-    TABLE — the k-independent twin of the literal
-    :func:`_centroid_dist_structs` ranking (r8: VERDICT design note 3).
-
-    Shape: the k-row centroid frame broadcasts into a cross join, the
-    query VECTOR is dropped before the rank shuffle (only skinny
-    (q_id, cid, dist) rows move — shuffling |Q|·k copies of a d-dim
-    array would dwarf the ranking itself), and a per-query window keeps
-    the ``n_probe`` nearest. Ordering is (dist asc, cid asc) — exactly
-    the lexicographic struct sort of the literal path — and the
-    distance is the SAME zip_with/aggregate fold, so the two forms are
-    bit-equal (pinned in tests/test_ann_batch.py)."""
-    from pyspark.sql import Window
-
-    cent = _centroid_frame(spark, centroids)
-    dists = (
-        qframe.select("q_id", "qv")
-        .join(F.broadcast(cent))
-        .select(
-            "q_id",
-            "cid",
-            # One parsed expression (r15, the _centroid_dist_structs
-            # discipline) — identical fold tree, no per-lambda Py4J
-            # round trips on every probe plan build.
-            F.expr(
-                "aggregate(zip_with(qv, cvec, (a, b) -> (a - b) * (a - b)),"
-                " 0D, (acc, x) -> acc + x)"
-            ).alias("dist"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("cid").asc())
+def _dist_structs(v_sql: str, c_sql: str, cid_sql: str = "c.cid") -> str:
+    """SQL: one ``(dist, cid)`` struct per centroid ``c`` of ``c_sql`` —
+    ``dist`` is the squared L2 distance from the vector ``v_sql``
+    (zip_with + aggregate fold, 0.0 init, the ``similarity.dot`` order)."""
     return (
-        dists.withColumn("_crn", F.row_number().over(w))
-        .filter(F.col("_crn") <= n_probe)
-        .select("q_id", F.col("cid").alias("centroid_id"))
+        f"transform({c_sql}, c -> named_struct('dist', aggregate(zip_with("
+        f"{v_sql}, c.cv, (a, b) -> (a - b) * (a - b)), 0D, "
+        f"(acc, x) -> acc + x), 'cid', {cid_sql}))"
     )
+
+
+def _nearest_centroids(v_sql: str, c_sql: str, n: int) -> str:
+    """THE nearest-centroid kernel every IVF, IVF-PQ and Lloyd routing
+    site shares: SQL for the ``n`` nearest centroids of ``c_sql``
+    (:func:`_centroids_sql`) to the vector ``v_sql``, as an array of
+    ``(dist, cid)`` structs, nearest first. Structs sort
+    lexicographically, so exact distance ties resolve to the lowest
+    cid — the driver-side ``sorted(range(k), key=dist)`` of
+    :func:`ivf_topk_indexed`. Row-local and constant work per row: no
+    window, join or shuffle picks the centroids, and every site that
+    routes with it assigns a vector the same cell."""
+    return f"slice(array_sort({_dist_structs(v_sql, c_sql)}), 1, {int(n)})"
 
 
 def append_to_ivf_index(batch: DataFrame, path: str) -> None:
@@ -1253,11 +1187,12 @@ def append_to_ivf_index(batch: DataFrame, path: str) -> None:
     asymmetry between the two layouts.
 
     Each vector is assigned its nearest PERSISTED centroid JVM-side
-    (:func:`_centroid_dist_structs` argmin — the quantizer is FROZEN at
-    build time; appending never refits, so probe routing for old and
-    new rows stays consistent forever) and appended into the matching
-    ``centroid_id=`` partition. Exact distance ties resolve to the
-    lowest cid, the same tie-break the probes use. The assignment
+    (element 1 of the :func:`_nearest_centroids` kernel the probes
+    route with — the quantizer is FROZEN at build time; appending never
+    refits, so probe routing for old and new rows stays consistent
+    forever) and appended into the matching ``centroid_id=`` partition
+    in one pass over ``batch``, at any centroid count. Exact distance
+    ties resolve to the lowest cid, the same tie-break the probes use. The assignment
     agrees with the build-time spark.ml ``model.transform`` except on
     exact-tie distances (measure-zero for float embeddings); the
     Python-argmin equivalence is pinned in tests/test_ann_batch.py.
@@ -1271,43 +1206,14 @@ def append_to_ivf_index(batch: DataFrame, path: str) -> None:
     # append_to_lsh_index.
     if meta.pop("src", None) is not None:
         _write_meta(path, meta)
-    centroids = meta["centroids"]
-    qv = _as_double(F.col(meta["vec_col"]))
-    if len(centroids) <= MAX_LITERAL_CENTROIDS:
-        qv_sql = f"transform(`{meta['vec_col']}`, x -> CAST(x AS DOUBLE))"
-        nearest = F.element_at(
-            F.array_sort(_centroid_dist_structs(qv_sql, centroids)), 1
-        )["cid"]
-        assigned = batch.withColumn("centroid_id", nearest)
-    else:
-        # k-independent assignment, the probe's r8 rule applied to the
-        # append: argmin = n_probe=1 of the broadcast centroid-table
-        # ranking (identical fold + (dist, cid) order ⇒ identical
-        # assignment; pinned in tests/test_ann_batch.py). The batch is
-        # read twice (ranking + join-back), so it persists across the
-        # write — a non-deterministic batch lineage must not rank one
-        # evaluation and store another (the probe-persist rule); unlike
-        # the probes, the action completes INSIDE this function, so the
-        # persist is released right here instead of via ContextCleaner.
-        id_col = meta["id_col"]
-        batch = batch.persist()
-        qframe = batch.select(F.col(id_col).alias("q_id"), qv.alias("qv"))
-        sel = _nearest_centroids_join(
-            batch.sparkSession, qframe, centroids, n_probe=1
-        )
-        assigned = batch.join(
-            sel.withColumnRenamed("q_id", id_col), id_col
-        )
-    try:
-        (
-            assigned
-            .write.mode("append")
-            .partitionBy("centroid_id")
-            .parquet(path)
-        )
-    finally:
-        if len(centroids) > MAX_LITERAL_CENTROIDS:
-            batch.unpersist()
+    qv_sql = f"transform(`{meta['vec_col']}`, x -> CAST(x AS DOUBLE))"
+    nearest = _nearest_centroids(qv_sql, _centroids_sql(meta["centroids"]), 1)
+    (
+        batch.withColumn("centroid_id", F.expr(f"element_at({nearest}, 1).cid"))
+        .write.mode("append")
+        .partitionBy("centroid_id")
+        .parquet(path)
+    )
 
 
 def ivf_probe_index_batch(
@@ -1333,12 +1239,13 @@ def ivf_probe_index_batch(
     :func:`ivf_topk_indexed`.
 
     Per-query centroid selection stays fully JVM-side (no driver loop
-    over queries): each query ranks the persisted centroids by squared
-    L2 distance via an array-of-structs ``array_sort`` — the centroid
-    list is meta-sized (16 literals), so this is constant work per
-    query row — keeps the ``n_probe`` nearest, and explodes to a tiny
-    (q_id, centroid_id) probe table that broadcasts into an equi-join
-    on the index's PARTITION column. Candidates dedup on (query,
+    over queries): each query row ranks the persisted centroids by
+    squared L2 distance with the :func:`_nearest_centroids` kernel —
+    ``array_sort`` over ``(dist, cid)`` structs against the centroid
+    list folded into ONE plan constant, constant work per query row at
+    any centroid count — keeps the ``n_probe`` nearest, and explodes to
+    a tiny (q_id, centroid_id) probe table that broadcasts into an
+    equi-join on the index's PARTITION column. Candidates dedup on (query,
     vector) after scoring keeping the max-cosine copy — the same
     :func:`_dedup_max_cosine` the LSH probe applies, so duplicate index
     rows (repeated source ids, or replayed :func:`append_to_ivf_index`
@@ -1371,34 +1278,20 @@ def ivf_probe_index_batch(
         qv.alias("qv"),
         l2_norm(qv).alias("qnorm"),
     )
-    if len(centroids) <= MAX_LITERAL_CENTROIDS:
-        # Small-k fast path: per-row literal array_sort, no extra
-        # shuffle and no second pass over the query frame.
-        dist_structs = _centroid_dist_structs("qv", centroids)
-        probes = qbase.withColumn(
-            "_probe", F.explode(F.slice(F.array_sort(dist_structs), 1, n_probe))
-        ).select("q_id", "qv", "qnorm", F.col("_probe.cid").alias("centroid_id"))
-    else:
-        # k-independent path: broadcast centroid-table join (r8; see
-        # MAX_LITERAL_CENTROIDS). qbase persists because TWO plans read
-        # it below (the distance ranking and the qv/qnorm join-back) —
-        # a non-deterministic query lineage must not desync them; same
-        # ContextCleaner-reclaim contract as `probes`.
-        qbase = qbase.persist()
-        sel = _nearest_centroids_join(spark, qbase, centroids, n_probe)
-        probes = qbase.join(sel, "q_id").select(
-            "q_id", "qv", "qnorm", "centroid_id"
-        )
+    nearest = _nearest_centroids("qv", _centroids_sql(centroids), n_probe)
+    probes = qbase.withColumn("_probe", F.explode(F.expr(nearest))).select(
+        "q_id", "qv", "qnorm", F.col("_probe.cid").alias("centroid_id")
+    )
     # Static partition filter, like the LSH twin: DPP's pruningHasBenefit
     # heuristic can decline to fire on an unfiltered probe side, and then
     # every micro-batch scans ALL centroid directories. The distinct
     # probed-centroid set is bounded by the meta-sized centroid count, so
     # the collect is trivially cheap; the persist keeps the collect and
     # the join on ONE evaluation of `queries` (r7 ANN review). No
-    # matching unpersist, deliberately: the returned plan reads `probes`,
-    # so eager unpersist would recompute the lineage at action time and
-    # reintroduce the desync; MEMORY_AND_DISK blocks are reclaimed by
-    # the ContextCleaner once the caller drops the frame (r8 advice).
+    # matching unpersist: the returned plan reads `probes`, so an eager
+    # unpersist would recompute the lineage at action time and
+    # reintroduce the desync. The CacheManager keeps the entry until an
+    # explicit unpersist (plans/core.py), so each call leaves one.
     probes = probes.persist()
     probed_cids = [
         r["centroid_id"] for r in probes.select("centroid_id").distinct().collect()

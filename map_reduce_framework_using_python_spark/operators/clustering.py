@@ -5,8 +5,9 @@ KMeans used as IVF's coarse quantizer in similarity.py): each Lloyd
 iteration is one distributed pass —
 
 1. **assign**: per-row argmin over k squared distances, a pure JVM
-   expression (array of (dist, cluster) structs → ``array_min``; struct
-   ordering breaks ties by cluster id, so assignment is deterministic);
+   expression (the shared nearest-centroid kernel: array of
+   (dist, cluster) structs, sorted; struct ordering breaks ties by
+   cluster id, so assignment is deterministic);
 2. **update**: ``posexplode`` the vectors and average per
    (cluster, dimension) — a partial+final hash aggregate whose output
    is k×dim numbers.
@@ -48,27 +49,20 @@ def assign_clusters(
     """Append ``cluster``: index of the nearest centroid (squared
     euclidean; ties broken by lowest cluster id via struct ordering).
 
-    Built as ONE generated-SQL expression (exact-round-trip ``repr``
-    double literals, the similarity._bucket_expr discipline): the
-    Column-API form (k × dim per-element ``F.lit`` + per-centroid
-    lambda conversion) cost ~0.5 s of driver-side Python per call, ×3
-    calls inside :func:`kmeans_fit` — the dominant wall-clock of the
-    SemDeDup bench row. Parses to the identical Catalyst expression
-    (ZipWith fold with 0.0 init, struct min), pinned bit-equal in
-    tests/test_clustering.py."""
-    from map_reduce_framework_using_python_spark.operators.similarity import _dstr
-
-    structs = []
-    for i, c in enumerate(centroids):
-        arr = "array(" + ",".join(_dstr(x) for x in c) + ")"
-        d = (
-            f"aggregate(zip_with(`{vec_col}`, {arr}, (x, y) -> "
-            f"(x - y) * (x - y)), 0.0D, (acc, x) -> acc + x)"
-        )
-        structs.append(f"named_struct('d', {d}, 'c', {i})")
-    return vecs.withColumn(
-        "cluster", F.expr("array_min(array(" + ",".join(structs) + "))['c']")
+    Element 1's ``cid`` of the shared nearest-centroid kernel
+    (:func:`~.ann_index._nearest_centroids`) — the centroid list enters
+    the plan as ONE folded constant, so plan size and driver-side build
+    time do not grow as k × dim literal expressions (the Column-API
+    form cost ~0.5 s per call, ×3 calls inside :func:`kmeans_fit`).
+    Same ZipWith fold with 0.0 init and the same (dist, id) order as
+    the Column form, pinned bit-equal in tests/test_clustering.py."""
+    from map_reduce_framework_using_python_spark.operators.ann_index import (
+        _centroids_sql,
+        _nearest_centroids,
     )
+
+    nearest = _nearest_centroids(f"`{vec_col}`", _centroids_sql(centroids), 1)
+    return vecs.withColumn("cluster", F.expr(f"element_at({nearest}, 1).cid"))
 
 
 def _round6(x: float) -> float:

@@ -63,14 +63,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from map_reduce_framework_using_python_spark.operators import (
-    ann_index as _ann,
-)
 from map_reduce_framework_using_python_spark.operators.ann_index import (
     _apply_tombstones,
-    _centroid_dist_structs,
+    _centroids_sql,
     _compact_partitioned_index,
-    _nearest_centroids_join,
+    _dist_structs,
+    _nearest_centroids,
     _parquet_rows_under,
     _read_meta,
     _write_meta,
@@ -91,32 +89,21 @@ from map_reduce_framework_using_python_spark.operators.similarity import (
 )
 
 
-def _centroid_array_row(df: DataFrame, centroids: list[list[float]]) -> DataFrame:
-    """ONE broadcast row carrying the coarse centroids as a plain
-    array-of-arrays (``carr``), for positional lookup by centroid_id —
-    data, not per-row plan literals (the _books_row discipline)."""
-    return df.sparkSession.createDataFrame(
-        [([list(map(float, c)) for c in centroids],)],
-        "carr array<array<double>>",
-    )
-
-
 #: Residual of a routed vector against its assigned coarse centroid —
 #: the by-residual encode/probe space (PQ quantizes x − c(x), the FAISS
 #: IVFADC default: cells absorb the coarse component so the codebooks
-#: spend their 8 bits on the fine structure).
-def _residual_expr(vec: str) -> F.Column:
+#: spend their 8 bits on the fine structure). ``c_sql`` is the centroid
+#: constant of :func:`~.ann_index._centroids_sql`; the lookup is
+#: positional by ``centroid_id``.
+def _residual_expr(vec: str, c_sql: str) -> F.Column:
     return F.expr(
-        f"zip_with({vec}, element_at(carr, centroid_id + 1),"
+        f"zip_with({vec}, element_at({c_sql}, centroid_id + 1).cv,"
         " (a, b) -> a - b)"
     )
 
 
 def _assign_hier(
-    vn: DataFrame,
-    c1: list[list[float]],
-    c2: list[list[float]],
-    id_col: str,
+    vn: DataFrame, c1: list[list[float]], c2: list[list[float]]
 ) -> DataFrame:
     """Append ``centroid_id`` = LEAF cell of the two-level coarse
     quantizer (``l1 · len(c2) + l2``): route to the nearest level-1
@@ -129,28 +116,13 @@ def _assign_hier(
     map-side math through both levels, so it commutes across any corpus
     split exactly like the flat :func:`_assigned` (the
     append-commutes-with-build contract)."""
-    k2 = len(c2)
-    a1 = (
-        _assigned(vn, c1, id_col)
-        .crossJoin(F.broadcast(_centroid_array_row(vn, c1)))
-        .withColumn("_rv", _residual_expr("vn"))
-        .drop("carr")
-        .withColumnRenamed("centroid_id", "_c1")
-    )
-    # level-2 routing of the residual: reuse the shared _assigned kernel
-    # by presenting the residual as the routed column
-    r = _assigned(
-        a1.withColumnRenamed("vn", "_vn0").withColumnRenamed("_rv", "vn"),
-        c2, id_col,
-    ).withColumnRenamed("centroid_id", "_c2")
+    c1_sql, c2_sql = _centroids_sql(c1), _centroids_sql(c2)
+    l2 = f"element_at({_nearest_centroids('_rv', c2_sql, 1)}, 1).cid"
     return (
-        r.withColumnRenamed("vn", "_rv")
-        .withColumnRenamed("_vn0", "vn")
-        .withColumn(
-            "centroid_id",
-            (F.col("_c1") * F.lit(k2) + F.col("_c2")).cast("int"),
-        )
-        .drop("_c1", "_c2", "_rv")
+        _assigned(vn, c1_sql)
+        .withColumn("_rv", _residual_expr("vn", c1_sql))
+        .withColumn("centroid_id", F.expr(f"centroid_id * {len(c2)} + {l2}"))
+        .drop("_rv")
     )
 
 
@@ -159,20 +131,18 @@ def _assign_and_encode(
     keys: list[str],
     centroids: list[list[float]],
     books: list[list[list[float]]],
-    id_col: str,
     by_residual: bool = False,
     hier: dict | None = None,
 ) -> DataFrame:
     """(keys…, centroid_id, codes) for every row of a vector frame —
     the ONE map-side pass build and append share: coarse argmin via the
-    literal struct-sort (k ≤ MAX_LITERAL_CENTROIDS) or the
-    k-independent broadcast-centroid-table join above it (the r8 IVF
-    rule), then the PQ argmin against the single broadcast codebook
-    row — over the vector itself, or (``by_residual``) over the
-    residual against the assigned coarse centroid. Both quantizers are
-    pure row-local functions of the persisted model state either way,
-    so this pass commutes with itself across any corpus split — the
-    append-commutes-with-build pin rests on exactly that.
+    shared :func:`~.ann_index._nearest_centroids` kernel (at any
+    centroid count), then the PQ argmin against the single broadcast
+    codebook row — over the vector itself, or (``by_residual``) over
+    the residual against the assigned coarse centroid. Both quantizers
+    are pure row-local functions of the persisted model state either
+    way, so this pass commutes with itself across any corpus split —
+    the append-commutes-with-build pin rests on exactly that.
 
     ``hier`` (the meta's two-level dict) routes through
     :func:`_assign_hier` instead of the flat argmin — leaf-cell ids,
@@ -185,45 +155,27 @@ def _assign_and_encode(
         )
     sub = len(books[0][0])
     if hier is not None:
-        assigned = _assign_hier(
-            vn, hier["centroids_l1"], hier["centroids_l2"], id_col
-        )
+        assigned = _assign_hier(vn, hier["centroids_l1"], hier["centroids_l2"])
     else:
-        assigned = _assigned(vn, centroids, id_col)
+        c_sql = _centroids_sql(centroids)
+        assigned = _assigned(vn, c_sql)
     assigned = assigned.crossJoin(F.broadcast(_books_row(vn, books)))
     col = "vn"
     if by_residual:
-        assigned = assigned.crossJoin(
-            F.broadcast(_centroid_array_row(vn, centroids))
-        ).withColumn("_rv", _residual_expr("vn"))
+        assigned = assigned.withColumn("_rv", _residual_expr("vn", c_sql))
         col = "_rv"
     return assigned.select(
         *keys, "centroid_id", _code_expr(sub, col).alias("codes")
     )
 
 
-def _assigned(
-    vn: DataFrame, centroids: list[list[float]], id_col: str
-) -> DataFrame:
-    """Append ``centroid_id``: literal struct-sort argmin up to
-    MAX_LITERAL_CENTROIDS, broadcast-centroid-table join above it (the
-    r8 rule) — one definition so build, append, and the residual
-    fitting pass can never route differently."""
-    if len(centroids) <= _ann.MAX_LITERAL_CENTROIDS:
-        nearest = F.element_at(
-            F.array_sort(_centroid_dist_structs("vn", centroids)), 1
-        )["cid"]
-        return vn.withColumn("centroid_id", nearest)
-    qframe = vn.select(F.col(id_col).alias("q_id"), F.col("vn").alias("qv"))
-    sel = _nearest_centroids_join(vn.sparkSession, qframe, centroids, n_probe=1)
-    return vn.join(sel.withColumnRenamed("q_id", id_col), id_col).withColumn(
-        # the join path's cid is BIGINT while the literal path emits
-        # INT — unify so downstream positional lookups
-        # (element_at(carr, centroid_id + 1) in _residual_expr) and the
-        # hier leaf composition type-check on both routes (r13: first
-        # fired at a 80-centroid residual fit)
-        "centroid_id", F.col("centroid_id").cast("int")
-    )
+def _assigned(vn: DataFrame, c_sql: str) -> DataFrame:
+    """Append ``centroid_id``: element 1 of the shared
+    :func:`~.ann_index._nearest_centroids` kernel over ``vn`` — one
+    definition so build, append, and the residual fitting pass can
+    never route differently."""
+    nearest = _nearest_centroids("vn", c_sql, 1)
+    return vn.withColumn("centroid_id", F.expr(f"element_at({nearest}, 1).cid"))
 
 
 def _residual_frame(
@@ -233,10 +185,9 @@ def _residual_frame(
     vector its nearest coarse centroid (the shared :func:`_assigned`
     routing) and subtract. Returns a frame whose ``vn`` column IS the
     residual, ready for :func:`~.pq._fit_books`."""
-    return (
-        _assigned(vn, centroids, id_col)
-        .crossJoin(F.broadcast(_centroid_array_row(vn, centroids)))
-        .select(F.col(id_col), _residual_expr("vn").alias("vn"))
+    c_sql = _centroids_sql(centroids)
+    return _assigned(vn, c_sql).select(
+        F.col(id_col), _residual_expr("vn", c_sql).alias("vn")
     )
 
 
@@ -339,7 +290,7 @@ def build_ivfpq_index(
             )
         (
             _assign_and_encode(
-                vn, keys, centroids, books, id_col, by_residual=by_residual
+                vn, keys, centroids, books, by_residual=by_residual
             )
             # one file per cell directory (ann_index.build_lsh_index's
             # r12 layout rule): a fresh build starts compaction-clean
@@ -417,7 +368,7 @@ def build_ivfpq_index_lloyd(
         books.append(cents)
     vn = df.select(*keys, _as_double(F.col(vec_col)).alias("vn"))
     (
-        _assign_and_encode(vn, keys, coarse, books, id_col)
+        _assign_and_encode(vn, keys, coarse, books)
         # one file per cell directory (the r12 layout rule)
         .repartition(F.col("centroid_id"))
         .write.mode("overwrite")
@@ -533,7 +484,7 @@ def build_ivfpq_index_hier(
             "centroids_l1": c1, "centroids_l2": c2,
         }
         (
-            _assign_and_encode(vn, keys, [], books, id_col, hier=hier)
+            _assign_and_encode(vn, keys, [], books, hier=hier)
             # one file per cell directory (the r12 layout rule)
             .repartition(F.col("centroid_id"))
             .write.mode("overwrite")
@@ -636,7 +587,7 @@ def build_ivfpq_index_hier_lloyd(
             "centroids_l1": c1, "centroids_l2": c2,
         }
         (
-            _assign_and_encode(vn, keys, [], books, id_col, hier=hier)
+            _assign_and_encode(vn, keys, [], books, hier=hier)
             # one file per cell directory (the r12 layout rule)
             .repartition(F.col("centroid_id"))
             .write.mode("overwrite")
@@ -705,75 +656,41 @@ def _hier_probe_cells(
     return [cell for _, cell in cand[: int(n_probe)]]
 
 
-def _nearest_cells_join_hier(
-    spark: SparkSession,
-    qframe: DataFrame,
+def _nearest_cells_hier(
+    v_sql: str,
     c1: list[list[float]],
     c2: list[list[float]],
     n_probe: int,
     n_probe1: int,
-) -> DataFrame:
-    """(q_id, centroid_id) per query via the DISTRIBUTED IMI
-    multi-sequence walk — the batch twin of :func:`_hier_probe_cells`:
-    rank level 1 with the k-independent broadcast-table join
-    (``_nearest_centroids_join`` over k1 rows), keep ``n_probe1``
-    parents per query, subtract each parent map-side (broadcast
-    centroid-array row), rank the residuals against the k2-row
-    level-2 table, and window the composed cells per query by the
-    exact leaf distance ‖(q − c1ᵢ) − c2ⱼ‖² (ties → composed cell id,
-    the composed sort's rule).
+) -> str:
+    """SQL for a query row's ``n_probe`` nearest leaf cells via the IMI
+    multi-sequence walk, per row — the batch twin of
+    :func:`_hier_probe_cells`: rank level 1 with the shared
+    :func:`~.ann_index._nearest_centroids` kernel and keep ``n_probe1``
+    parents, subtract each parent once, score every level-2 centroid
+    against each residual as a ``(dist, cid)`` struct with the leaf
+    cell id ``p.cid·k2 + c.cid``, then ``flatten``, ``array_sort`` and
+    ``slice`` — the exact leaf distance ‖(q − c1ᵢ) − c2ⱼ‖², ties →
+    lowest cell id, the composed sort's rule. Same struct shape as the
+    kernel, so callers explode either one identically.
 
-    The 100 TB shape: broadcast state shrinks from k1·k2·dim doubles
-    (the composed centroid table — 32 MB at a 250×250×64 grid) to
+    The 100 TB shape: plan state shrinks from k1·k2·dim doubles (the
+    composed centroid list — 32 MB at a 250×250×64 grid) to
     (k1 + k2)·dim, and per-query work from k1·k2 to
-    k1 + n_probe1·k2 distance folds; only skinny
-    (q_id, cell, dist) rows reach the rank window."""
-    from pyspark.sql import Window
-
-    from map_reduce_framework_using_python_spark.operators.ann_index import (
-        _centroid_frame,
-        _nearest_centroids_join,
-    )
-
-    k2 = len(c2)
+    k1 + n_probe1·k2 distance folds, with no window or join."""
+    c1_sql, c2_sql = _centroids_sql(c1), _centroids_sql(c2)
     # clamp like the driver twin (_hier_probe_cells): n_probe1 <= 0
-    # must probe 1 parent, never silently return an empty frame
-    sel1 = _nearest_centroids_join(spark, qframe, c1, max(1, int(n_probe1)))
-    r = (
-        qframe.join(sel1, "q_id")
-        .crossJoin(F.broadcast(_centroid_array_row(qframe, c1)))
-        .select(
-            "q_id",
-            F.col("centroid_id").alias("_l1"),
-            # _nearest_centroids_join emits a BIGINT cid; element_at's
-            # index must be INT (the r13 type-mismatch lesson)
-            F.expr(
-                "zip_with(qv, element_at(carr,"
-                " CAST(centroid_id AS INT) + 1), (a, b) -> a - b)"
-            ).alias("_rv"),
-        )
+    # must probe 1 parent, never silently return no cell
+    parents = _nearest_centroids(v_sql, c1_sql, max(1, int(n_probe1)))
+    residuals = (
+        f"transform({parents}, p -> named_struct('pid', p.cid, 'rv',"
+        f" zip_with({v_sql}, element_at({c1_sql}, p.cid + 1).cv,"
+        " (a, b) -> a - b)))"
     )
-    dists = (
-        r.join(F.broadcast(_centroid_frame(spark, c2)))
-        .select(
-            "q_id",
-            (F.col("_l1") * F.lit(k2) + F.col("cid")).cast("int").alias("cell"),
-            F.aggregate(
-                F.zip_with(
-                    F.col("_rv"), F.col("cvec"), lambda a, b: (a - b) * (a - b)
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("dist"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("dist").asc(), F.col("cell").asc()
-    )
+    cells = _dist_structs("p.rv", c2_sql, f"p.pid * {len(c2)} + c.cid")
     return (
-        dists.withColumn("_crn", F.row_number().over(w))
-        .filter(F.col("_crn") <= n_probe)
-        .select("q_id", F.col("cell").alias("centroid_id"))
+        f"slice(array_sort(flatten(transform({residuals}, p -> {cells}))),"
+        f" 1, {int(n_probe)})"
     )
 
 
@@ -931,12 +848,12 @@ def ivfpq_probe_index_batch(
     label, cosine, rn)``.
 
     Fully JVM-side per-query work: each query normalizes, ranks the
-    persisted centroid literals (array_sort — meta-sized constant work
-    per row), keeps ``n_probe`` cells, and builds its OWN m×k ADC
-    table against the single broadcast codebook row (m·k doubles per
-    query — bounded model math riding the probe rows, never plan
-    literals per query). The tiny probe table broadcasts into an
-    equi-join on the index's PARTITION column; the static
+    persisted centroids (array_sort over the folded centroid constant —
+    meta-sized constant work per row), keeps ``n_probe`` cells, and
+    builds its OWN m×k ADC table against the single broadcast codebook
+    row (m·k doubles per query — bounded model math riding the probe
+    rows, never plan literals per query). The tiny probe table
+    broadcasts into an equi-join on the index's PARTITION column; the static
     ``centroid_id IN (...)`` filter keeps pruning independent of DPP
     heuristics (the LSH/IVF probe rule). Candidates collapse to one
     row per (query, id) at their best ADC before the per-query
@@ -961,13 +878,14 @@ def ivfpq_probe_index_batch(
     (:func:`~.ann_index.delete_from_index`) are dropped the same way on
     every probe form.
 
-    ``n_probe1`` (hier indexes only): route with the distributed IMI
-    multi-sequence walk (:func:`_nearest_cells_join_hier`) instead of
-    ranking all k1·k2 composed centroids — broadcast state and
-    per-query work shrink from k1·k2 to k1 + n_probe1·k2, the batch
-    scale path past ~10⁵ leaves. Default None keeps composed ranking
-    (literal structs up to MAX_LITERAL_CENTROIDS, broadcast-table join
-    above it)."""
+    Routing is per query row, with no window or join: the shared
+    :func:`~.ann_index._nearest_centroids` kernel ranks the centroid
+    list folded into ONE plan constant, at any centroid count.
+    ``n_probe1`` (hier indexes only): route with the per-row IMI
+    multi-sequence walk (:func:`_nearest_cells_hier`) instead of
+    ranking all k1·k2 composed centroids — plan state and per-query
+    work shrink from k1·k2 to k1 + n_probe1·k2, the batch scale path
+    past ~10⁵ leaves. Default None ranks the composed centroids."""
     from pyspark.sql import Window
 
     meta = _ivfpq_meta(path)
@@ -1008,41 +926,32 @@ def ivfpq_probe_index_batch(
     # TWO subplans read qbase (centroid routing and the rerank
     # join-back) — a non-deterministic query lineage must not route one
     # evaluation and rerank another (the r7 ANN desync rule), so it
-    # persists up front; ContextCleaner reclaims the blocks when the
-    # caller drops the returned frame.
+    # persists up front. Nothing unpersists it: the returned plan reads
+    # it, and the CacheManager keeps the entry until an explicit
+    # unpersist (plans/core.py).
     qbase = qbase.persist()
     if n_probe1 is not None:
         h = meta["hier"]
-        sel = _nearest_cells_join_hier(
-            spark, qbase.select("q_id", F.col("qvn").alias("qv")),
-            h["centroids_l1"], h["centroids_l2"], n_probe, n_probe1,
+        nearest = _nearest_cells_hier(
+            "qvn", h["centroids_l1"], h["centroids_l2"], n_probe, n_probe1
         )
-        routed = qbase.join(sel, "q_id").select("q_id", "qvn", "centroid_id")
-    elif len(centroids) <= _ann.MAX_LITERAL_CENTROIDS:
-        dist_structs = _centroid_dist_structs("qvn", centroids)
-        routed = qbase.withColumn(
-            "_probe", F.explode(F.slice(F.array_sort(dist_structs), 1, n_probe))
-        ).select("q_id", "qvn", F.col("_probe.cid").alias("centroid_id"))
     else:
-        # k-independent path (the r8 MAX_LITERAL_CENTROIDS rule): rank
-        # against the broadcast centroid TABLE.
-        sel = _nearest_centroids_join(
-            spark, qbase.select("q_id", F.col("qvn").alias("qv")),
-            centroids, n_probe,
-        )
-        routed = qbase.join(sel, "q_id").select("q_id", "qvn", "centroid_id")
+        c_sql = _centroids_sql(centroids)
+        nearest = _nearest_centroids("qvn", c_sql, n_probe)
+    routed = qbase.withColumn("_probe", F.explode(F.expr(nearest))).select(
+        "q_id", "qvn", F.col("_probe.cid").alias("centroid_id")
+    )
     # Per-query ADC table from the ONE broadcast codebook row: m×k exact
     # query-to-centroid squared distances as DATA on the probe rows.
     # by_residual indexes score the query's per-cell RESIDUAL (q − c,
-    # computed JVM-side off the broadcast centroid-array row), so each
+    # looked up by centroid_id in the folded centroid constant), so each
     # (query, probed cell) row carries its own table — same bounded
-    # m×k payload per row either way.
+    # m×k payload per row either way. by_residual indexes are flat, so
+    # c_sql is set whenever it is read.
     routed = routed.crossJoin(F.broadcast(_books_row(queries, books)))
     qcol = "qvn"
     if meta.get("by_residual", False):
-        routed = routed.crossJoin(
-            F.broadcast(_centroid_array_row(queries, centroids))
-        ).withColumn("_rq", _residual_expr("qvn"))
+        routed = routed.withColumn("_rq", _residual_expr("qvn", c_sql))
         qcol = "_rq"
     tbl = F.expr(
         "transform(books, b -> transform(b.cents, c ->"
@@ -1052,8 +961,9 @@ def ivfpq_probe_index_batch(
     probes = routed.select("q_id", "centroid_id", tbl.alias("tbl"))
     # Persist before the static collect: the collect and the join must
     # see ONE evaluation of `queries` (the r7 ANN desync rule). No
-    # matching unpersist — the returned plan reads `probes`; the
-    # ContextCleaner reclaims the blocks when the caller drops it.
+    # matching unpersist — the returned plan reads `probes`, and the
+    # CacheManager keeps the entry until an explicit unpersist
+    # (plans/core.py), so each call leaves one.
     probes = probes.persist()
     probed_cids = [
         r["centroid_id"] for r in probes.select("centroid_id").distinct().collect()
@@ -1190,7 +1100,7 @@ def append_to_ivfpq_index(batch: DataFrame, path: str) -> None:
         )
     (
         _assign_and_encode(
-            vn, keys, meta["centroids"], meta["books"], id_col,
+            vn, keys, meta["centroids"], meta["books"],
             by_residual=meta.get("by_residual", False),
             # hier layouts route through both frozen levels — flat
             # argmin over the composed leaf centroids is NOT the same

@@ -473,7 +473,8 @@ def ns_ivf_probe_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizer is the deterministic Lloyd run (k=8, 2 iterations,
     k-smallest-id init, half-up 1e-6 centroid rounding — exactly
     ns_kmeans_sizes' model): per-query centroid ranking via JVM
-    array_sort over the 8 persisted centroid literals, the 4 nearest
+    array_sort over the 8 persisted centroids, folded into ONE plan
+    constant (the shared nearest-centroid kernel), the 4 nearest
     exploded into a broadcast (q_id, centroid_id) probe table,
     equi-joined on the partition column — one plan for the whole batch,
     corpus scanned once, cosine ordering on the 1e-6 grid.
@@ -725,7 +726,7 @@ def ns_ivfpq_probe_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs (operators/ivfpq.build_ivfpq_index_lloyd — raw vector space,
     k-smallest-id init, half-up 1e-6 centroid rounding), probed
     grid-ordered: per-query coarse routing over the persisted centroid
-    literals, per-query m×k ADC tables off ONE broadcast codebook row,
+    constant, per-query m×k ADC tables off ONE broadcast codebook row,
     the quantized-ADC shortlist, and an exact grid-quantized cosine
     rerank against the full-vector table — one plan for the whole
     batch, the codes scan partition-pruned to the probed cells.

@@ -6,6 +6,7 @@ on (query vector, frozen index)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from map_reduce_framework_using_python_spark.operators.ann_index import (
@@ -359,9 +360,11 @@ def test_ivf_replayed_extend_probe_excludes_own_batch(spark, tmp_path):
     assert want
 
 
-def test_ivf_batch_probe_matches_per_query_indexed(spark, tmp_path):
+@pytest.mark.parametrize("n_centroids", [16, 40])
+def test_ivf_batch_probe_matches_per_query_indexed(spark, tmp_path, n_centroids):
     """IVF twin of the LSH pin: each q_id's rows (in rn order) must be
-    EXACTLY the single-query ivf_topk_indexed answer."""
+    EXACTLY the single-query ivf_topk_indexed answer, whose centroid
+    ranking is driver-side Python, at 16 and at 40 centroids."""
     from map_reduce_framework_using_python_spark.operators.ann_index import (
         build_ivf_index,
         ivf_probe_index_batch,
@@ -370,7 +373,7 @@ def test_ivf_batch_probe_matches_per_query_indexed(spark, tmp_path):
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     path = str(tmp_path / "ivf_idx")
-    build_ivf_index(emb, path, n_centroids=16, seed=42)
+    build_ivf_index(emb, path, n_centroids=n_centroids, seed=42)
     queries = emb.filter(F.col("vec_id").isin(list(_QIDS)))
     rows = ivf_probe_index_batch(spark, queries, path, k=5, n_probe=4).collect()
     assert {r["q_id"] for r in rows} == set(_QIDS)
@@ -855,11 +858,13 @@ def test_ivf_batch_probe_dedups_duplicate_index_rows(spark, tmp_path):
     assert len(pairs) == len(set(pairs))
 
 
-def test_ivf_append_assigns_with_frozen_centroids(spark, tmp_path):
+@pytest.mark.parametrize("n_centroids", [16, 40])
+def test_ivf_append_assigns_with_frozen_centroids(spark, tmp_path, n_centroids):
     """Appended vectors route to the nearest PERSISTED centroid (frozen
     quantizer, lowest-cid tie-break) — checked against a driver-side
-    Python argmin over the same meta centroids, and the meta src
-    fingerprint is dropped like the LSH append."""
+    Python argmin over the same meta centroids, at 16 and at 40
+    centroids, and the meta src fingerprint is dropped like the LSH
+    append."""
     import json
     import os
 
@@ -872,7 +877,7 @@ def test_ivf_append_assigns_with_frozen_centroids(spark, tmp_path):
     half_a = emb.filter(F.col("vec_id") % 2 == 0)
     half_b = emb.filter(F.col("vec_id") % 2 == 1).limit(50)
     path = str(tmp_path / "ivf")
-    build_ivf_index(half_a, path, n_centroids=16, seed=42)
+    build_ivf_index(half_a, path, n_centroids=n_centroids, seed=42)
     meta_path = os.path.join(path, "_ann_meta.json")
     with open(meta_path) as fh:
         meta = json.load(fh)
@@ -1100,37 +1105,36 @@ def test_lloyd_ivf_index_matches_kmeans_fit_assignments(spark, tmp_path):
     assert meta["quantizer"] == "lloyd8x2"
 
 
-def test_ivf_centroid_join_path_equals_literal_path(spark, tmp_path, monkeypatch):
-    """The k-independent broadcast centroid-table ranking must be
-    BIT-EQUAL to the literal array_sort ranking it replaces at scale
-    (r8: at k≈√n thousands of centroid literals in the plan recreate
-    the r7 wide-literal plan-build pathology; the join ships them as
-    data). Same zip_with fold, same (dist, cid) ordering — so forcing
-    the join path via MAX_LITERAL_CENTROIDS=0 must reproduce every
-    (q_id, vec_id, label, cosine, rn) row, both orderings."""
-    from map_reduce_framework_using_python_spark.operators import ann_index
+@pytest.mark.parametrize("bad", [float("nan"), float("inf")])
+def test_ivf_non_finite_centroid_fails_at_plan_build(spark, tmp_path, bad):
+    """A persisted centroid with a NaN or infinite coordinate cannot
+    enter the centroid constant (JSON has neither): both the batch
+    probe and the append raise ValueError while building the plan,
+    before any job reads the index."""
+    import json
+    import os
 
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    path = str(tmp_path / "ivf_idx")
-    ann_index.build_ivf_index(emb, path, n_centroids=16, seed=42)
-    queries = emb.filter(F.col("vec_id").isin(list(_QIDS)))
-    for grid_order in (False, True):
-        literal = {
-            tuple(r)
-            for r in ann_index.ivf_probe_index_batch(
-                spark, queries, path, k=5, n_probe=4, grid_order=grid_order
-            ).collect()
-        }
-        monkeypatch.setattr(ann_index, "MAX_LITERAL_CENTROIDS", 0)
-        joined = {
-            tuple(r)
-            for r in ann_index.ivf_probe_index_batch(
-                spark, queries, path, k=5, n_probe=4, grid_order=grid_order
-            ).collect()
-        }
-        monkeypatch.undo()
-        assert joined == literal
-        assert literal
+    from map_reduce_framework_using_python_spark.operators.ann_index import (
+        append_to_ivf_index,
+        ivf_probe_index_batch,
+    )
+
+    path = str(tmp_path / "ivf")
+    os.makedirs(path)
+    with open(os.path.join(path, "_ann_meta.json"), "w") as fh:
+        json.dump(
+            {"kind": "ivf", "n_centroids": 2, "vec_col": "embedding",
+             "id_col": "vec_id", "centroids": [[0.0, 1.0], [bad, 0.0]]},
+            fh,
+        )
+    batch = spark.createDataFrame(
+        [(1, [0.5, 0.5], 0)], "vec_id long, embedding array<float>, label int"
+    )
+    with pytest.raises(ValueError, match="non-finite centroid"):
+        ivf_probe_index_batch(spark, batch, path, k=1, n_probe=1)
+    with pytest.raises(ValueError, match="non-finite centroid"):
+        append_to_ivf_index(batch, path)
+    assert os.listdir(path) == ["_ann_meta.json"]
 
 
 def test_maintain_every_preserves_answers_and_bounds_layout(spark, tmp_path):

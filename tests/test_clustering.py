@@ -170,9 +170,9 @@ def test_semdedup_sample_fit_stays_sound(spark):
 
 
 def test_assign_clusters_sql_build_bit_equal_to_column_path(spark):
-    """The generated-SQL assignment (r7 fast build) must be BIT-equal
-    to the Column-API _sqdist form — same fold order, same repr
-    round-tripped centroid literals, same struct-min tie-break."""
+    """The kernel assignment (one folded centroid constant) must be
+    BIT-equal to the Column-API _sqdist form — same fold order, same
+    round-tripped centroid doubles, same (dist, id) tie-break."""
     from pyspark.sql import functions as F
 
     from map_reduce_framework_using_python_spark.operators.clustering import (

@@ -605,6 +605,42 @@ def test_residual_encoding_exactness_recall_and_append(spark, tmp_path):
     assert _codes_rows(spark, split) == _codes_rows(spark, joint)
 
 
+def test_residual_batch_probe_at_40_centroids_matches_single_query(
+    spark, tmp_path
+):
+    """The by-residual batched probe looks up each probed cell's
+    centroid by ``centroid_id``; at 40 centroids it must plan (a BIGINT
+    id fails element_at's INT index check), and each q_id's rows must
+    equal the single-query form."""
+    from map_reduce_framework_using_python_spark.operators.ivfpq import (
+        build_ivfpq_index,
+    )
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    path = str(tmp_path / "res40")
+    build_ivfpq_index(
+        emb, path, n_centroids=40, m=4, k=4, seed=42, max_iter=2,
+        by_residual=True,
+    )
+    knobs = dict(n_probe=6, shortlist=100)
+    qids = [0, 37]
+    batch = ivfpq_probe_index_batch(
+        spark, emb.filter(F.col("vec_id").isin(qids)), path, emb, k=10,
+        **knobs,
+    ).collect()
+    for qid in qids:
+        got = sorted(
+            (r["vec_id"], r["label"], r["cosine"])
+            for r in batch
+            if r["q_id"] == qid
+        )
+        single = sorted(
+            map(tuple, ivfpq_topk_indexed(emb, path, qid, topk=10, **knobs).collect())
+        )
+        assert got == single, qid
+        assert len(got) == 10, qid
+
+
 def test_residual_wins_on_clustered_corpus(spark, tmp_path):
     """The planted-structure experiment behind the by_residual
     docstring claim: on a CLUSTERED corpus (8 well-separated Gaussian
@@ -1116,7 +1152,7 @@ def test_sdc_grid_screen_keeps_recall(spark, tmp_path):
 
 
 def test_batch_imi_routing_equals_composed(spark, tmp_path):
-    """The DISTRIBUTED IMI walk (r14, _nearest_cells_join_hier): the
+    """The DISTRIBUTED IMI walk (r14, _nearest_cells_hier): the
     batched probe with n_probe1 >= k1 visits every level-1 parent, so
     its answers equal the composed-centroid-ranked batch probe exactly
     (full-probe cells identical; leaf distances differ only in float
@@ -1150,3 +1186,56 @@ def test_batch_imi_routing_equals_composed(spark, tmp_path):
             spark, queries, flat, emb, k=5, n_probe=2, shortlist=50,
             n_probe1=2,
         )
+
+
+
+def test_batch_imi_partial_walk_matches_single_query(spark, tmp_path):
+    """A PARTIAL IMI walk (n_probe1 < k1, n_probe < k1·k2) visits only
+    the cells of the best level-1 parents, so its answer depends on
+    which cells the walk picks: each q_id's batched rows must equal
+    the single-query form, whose walk is driver-side Python
+    (_hier_probe_cells)."""
+    import json
+
+    from map_reduce_framework_using_python_spark.operators.ivfpq import (
+        _hier_probe_cells,
+        _normalize_query,
+        build_ivfpq_index_hier,
+    )
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    path = str(tmp_path / "hier")
+    build_ivfpq_index_hier(
+        emb, path, n_cells_l1=4, n_cells_l2=2, m=4, k=4, seed=42
+    )
+    knobs = dict(n_probe=3, shortlist=100, n_probe1=2)
+    qids = [0, 2, 9]
+    # the case must exercise a partial walk: for some query the two
+    # best parents do not hold the 3 nearest of all 8 leaf cells
+    with open(os.path.join(path, "_ann_meta.json")) as fh:
+        meta = json.load(fh)
+    qns = [
+        _normalize_query(
+            [float(x) for x in emb.filter(F.col("vec_id") == q).head()["embedding"]]
+        )
+        for q in qids
+    ]
+    assert any(
+        _hier_probe_cells(qn, meta, 3, 2) != _hier_probe_cells(qn, meta, 3, 4)
+        for qn in qns
+    )
+    batch = ivfpq_probe_index_batch(
+        spark, emb.filter(F.col("vec_id").isin(qids)), path, emb, k=10,
+        **knobs,
+    ).collect()
+    for qid in qids:
+        got = sorted(
+            (r["vec_id"], r["label"], r["cosine"])
+            for r in batch
+            if r["q_id"] == qid
+        )
+        single = sorted(
+            map(tuple, ivfpq_topk_indexed(emb, path, qid, topk=10, **knobs).collect())
+        )
+        assert got == single, qid
+        assert len(got) == 10, qid
