@@ -42,20 +42,38 @@ from map_reduce_framework_using_python_spark.operators.similarity import (
     hyperplanes,
     lsh_bucket,
 )
+from map_reduce_framework_using_python_spark.sources.io import write_json_atomic
 
 #: Default root for index layouts (tests override with tmp_path).
 INDEX_ROOT = os.environ.get("SPARK_GRAFT_INDEX_ROOT", "/tmp/spark_graft_ann")
 
 
 def _write_meta(path: str, meta: dict) -> None:
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, "_ann_meta.json"), "w") as fh:
-        json.dump(meta, fh)
+    # temp + os.replace: a crash mid-dump must not truncate the sidecar,
+    # which every later probe, append and compaction reads.
+    write_json_atomic(os.path.join(path, "_ann_meta.json"), meta)
 
 
 def _read_meta(path: str) -> dict:
     with open(os.path.join(path, "_ann_meta.json")) as fh:
         return json.load(fh)
+
+
+def _drop_src_fingerprint(meta_file: str) -> dict:
+    """A mutated index is no longer a pristine build(source): drop the
+    ``src`` fingerprint that cache-reuse callers key on
+    (ann_queries._ensure_*, northstar._ensure_dedup_index,
+    pipeline8._ensure_paragraph_index), so they rebuild instead of
+    serving the mutated layout as build(corpus). Every mutation verb
+    (append, delete/retract, a compaction recovery that folds in a
+    racer's files) calls this; the ANN appends and deletes call it
+    BEFORE they write (fail-safe: if the write then dies, the only cost
+    is one cache rebuild). Returns the fingerprint-free meta dict."""
+    with open(meta_file) as fh:
+        meta = json.load(fh)
+    if meta.pop("src", None) is not None:
+        write_json_atomic(meta_file, meta)
+    return meta
 
 
 #: Subdirectory holding delete tombstones. Underscore-prefixed, so the
@@ -125,9 +143,7 @@ def delete_from_index(ids, path: str, spark: SparkSession | None = None) -> None
     pristine."""
     base, id_col = _tombstone_base(path)
     if os.path.exists(os.path.join(path, "_ann_meta.json")):
-        meta = _read_meta(path)
-        if meta.pop("src", None) is not None:
-            _write_meta(path, meta)
+        _drop_src_fingerprint(os.path.join(path, "_ann_meta.json"))
     if not isinstance(ids, DataFrame):
         if spark is None:
             raise ValueError(
@@ -494,14 +510,12 @@ def append_to_lsh_index(batch: DataFrame, path: str) -> None:
     on (query, vector) after scoring, keeping the max-cosine copy
     (:func:`lsh_probe_index_batch`), and :func:`compact_lsh_index`
     sheds the duplicate rows from storage."""
-    meta = _read_meta(path)
     # Drop the pristine-build fingerprint BEFORE the append: a crash (or
     # a concurrent _ensure read) between the parquet append and a
     # post-hoc meta rewrite would leave a mutated index still claiming
     # pristine (r7 ANN review). Dropping first fails safe — if the
     # append then dies, the only cost is one cache rebuild.
-    if meta.pop("src", None) is not None:
-        _write_meta(path, meta)
+    meta = _drop_src_fingerprint(os.path.join(path, "_ann_meta.json"))
     (
         batch.withColumn(
             "bucket", _bucket_fn_for(meta)(meta["vec_col"], meta["planes"])
@@ -527,10 +541,11 @@ def compact_lsh_index(
     (``write_partitions`` only caps write parallelism). Replay
     artifacts (exact-duplicate rows from at-least-once appends) are
     shed; the distinct row SET is unchanged. The rewrite goes through
-    a side directory and a two-rename swap, with the same crash
-    recovery as ``dedup_index.compact_index``: a crash between the
-    renames leaves the previous copy intact at ``__old`` and is rolled
-    back on the next call.
+    a side directory and a two-rename swap
+    (:func:`_compact_partitioned_index`, the one swap machine every
+    persisted index compacts through): a crash between the renames
+    leaves the previous copy intact at ``__old`` and is rolled back on
+    the next call.
 
     Compaction requires APPEND QUIESCENCE (run it between ingest
     batches — in the foreachBatch loop that is any point outside the
@@ -581,16 +596,53 @@ def _compact_partitioned_index(
     opname: str,
     _test_hook_post_aside=None,
     _rewrite=None,
+    schema: str | None = None,
+    meta_file: str | None = None,
 ) -> None:
-    """``part_col=None`` compacts a FLAT (unpartitioned) parquet dir —
+    """The one compaction swap machine of every persisted index (LSH,
+    IVF, IVF-PQ, flat PQ, every ``rebuild_*``, and the dedup MinHash /
+    paragraph / shingle layouts): rewrite the ``part_col``-partitioned
+    live dir ``path`` into one file per partition via a side directory
+    (``<path>__compact``) and a two-rename swap (live dir aside to
+    ``<path>__old``, side dir to live), with the full crash/race
+    protocol:
+
+    - a data-file snapshot taken before the rewrite is re-checked after
+      the rewrite AND after the rename-aside, so a part file (or a
+      tombstone) landing anywhere in the window aborts the swap (rolled
+      back, landed file kept live) instead of dying in ``__old``;
+    - a ``_swap_pending`` sentinel travels with the aside copy so
+      recovery always RESTORES the complete copy (folding in any data
+      files a racing appender landed in a recreated live dir, and
+      dropping the ``src`` fingerprint in ``meta_file`` when it does,
+      since the restored index is no longer build(corpus));
+    - a ``_swap_committed`` marker riding the final rename makes a
+      crash in the retire sequence self-describing, so recovery deletes
+      the stale aside copy instead of re-merging it — no crash ordering
+      loses OR duplicates rows;
+    - the rewrite applies ``dropDuplicates`` (exact duplicates from
+      replayed at-least-once appends heal) and physically purges
+      tombstoned ids, retiring the tombstone log in the same swap.
+
+    Appends should still be quiesced — the guards do not license
+    concurrency.
+
+    ``schema``: DDL schema the live dir is read with (default: infer).
+    The dedup layouts pass their fixed-width schemas, so a layout built
+    over an EMPTY corpus (no partition dirs) still compacts.
+    ``meta_file``: the sidecar whose ``src`` fingerprint a racer fold
+    drops (default ``<path>/_ann_meta.json``; the dedup layouts keep
+    ``_dedup_meta.json`` one level above the live dir). A missing file
+    is a no-op.
+
+    ``part_col=None`` compacts a FLAT (unpartitioned) parquet dir —
     the PQ codes layout (operators/pq.py) — with the identical
     two-rename swap, sentinel/commit-marker crash recovery, and
     two-stage concurrent-append guard; the snapshot is the top-level
     part-file listing and the rewrite is a plain ``repartition(n)``.
-    A layout whose meta sidecar is kept OUTSIDE the compacted dir
-    (PQ keeps ``codebooks.json`` beside ``codes/``) simply has no
-    ``_ann_meta.json`` here, and the meta preserve/fingerprint steps
-    no-op.
+    Only an ``_ann_meta.json`` INSIDE the compacted dir is carried
+    into the rewrite; a sidecar kept outside it (PQ's
+    ``codebooks.json`` beside ``codes/``, the dedup meta) stays put.
 
     ``_rewrite``: optional ``f(tmp_path) -> None`` producing the
     REPLACEMENT layout at ``tmp_path`` instead of the default
@@ -605,11 +657,6 @@ def _compact_partitioned_index(
     tmp = path.rstrip("/") + "__compact"
     old = path.rstrip("/") + "__old"
     sentinel = "_swap_pending"
-    # Written into tmp just before the final rename, so a committed
-    # swap is self-describing: recovery that finds the marker in the
-    # LIVE dir alongside a sentinel-marked __old knows the crash hit
-    # the post-commit retire window and deletes the stale aside copy
-    # instead of re-merging it (which would duplicate every row).
     committed = "_swap_committed"
 
     def _merge_tree(src: str, dst: str) -> int:
@@ -640,19 +687,8 @@ def _compact_partitioned_index(
                 moved += 1
         return moved
 
-    def _drop_src_fingerprint(base: str) -> None:
-        # Folding a racer's appended rows into a restored copy makes it
-        # no longer a pristine build(source): drop the 'src'
-        # fingerprint exactly as append_to_lsh_index/append_to_ivf_index
-        # do, so callers that trust src for cache reuse
-        # (ann_queries._ensure_*) rebuild instead of replaying a stale
-        # cache over appended data. No-op for meta-less flat layouts.
-        if not os.path.exists(os.path.join(base, "_ann_meta.json")):
-            return
-        m = _read_meta(base)
-        if m.pop("src", None) is not None:
-            _write_meta(base, m)
-
+    if meta_file is None:
+        meta_file = os.path.join(path, "_ann_meta.json")
     if os.path.isdir(old) and os.path.exists(os.path.join(old, sentinel)):
         if os.path.isdir(path) and os.path.exists(os.path.join(path, committed)):
             # The final rename COMMITTED and the crash hit the retire
@@ -673,8 +709,8 @@ def _compact_partitioned_index(
                 shutil.rmtree(path)
             os.remove(os.path.join(old, sentinel))
             os.rename(old, path)
-            if folded:
-                _drop_src_fingerprint(path)
+            if folded and os.path.exists(meta_file):
+                _drop_src_fingerprint(meta_file)
     elif not os.path.isdir(path) and os.path.isdir(old):
         os.rename(old, path)  # pre-sentinel crash shape: roll back
     shutil.rmtree(tmp, ignore_errors=True)
@@ -714,7 +750,8 @@ def _compact_partitioned_index(
     if _rewrite is not None:
         _rewrite(tmp)
     else:
-        deduped = spark.read.parquet(path).dropDuplicates()
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        deduped = reader.parquet(path).dropDuplicates()
         if _has_tombstones(path):
             # Physical purge: compaction is where tombstones become
             # real — the rewrite drops the tombstoned rows, and because
@@ -783,8 +820,8 @@ def _compact_partitioned_index(
         shutil.rmtree(path, ignore_errors=True)
         os.remove(os.path.join(old, sentinel))
         os.rename(old, path)
-        if folded:
-            _drop_src_fingerprint(path)
+        if folded and os.path.exists(meta_file):
+            _drop_src_fingerprint(meta_file)
         shutil.rmtree(tmp, ignore_errors=True)
         raise RuntimeError(
             f"{opname}: live dir was recreated during the swap window — "
@@ -793,13 +830,12 @@ def _compact_partitioned_index(
         )
     # The swap is COMMITTED, and the live dir carries the commit
     # marker: a crash anywhere in this retire sequence is recovered
-    # exactly (the marker + sentinel pair reads as "committed, retire
-    # interrupted" → the stale aside copy is deleted, never re-merged —
-    # the duplicate-re-merge window the pre-marker design accepted is
-    # closed). Retire order: sentinel first (so a crash during the
-    # possibly long rmtree reads as the benign no-sentinel cleanup
-    # shape), aside copy second, marker last (a stray marker is cleared
-    # by the next run's pre-clean).
+    # exactly (marker + sentinel reads as "committed, retire
+    # interrupted" → the stale aside copy is deleted, never re-merged).
+    # Retire order: sentinel first (so a crash during the possibly long
+    # rmtree reads as the benign no-sentinel cleanup shape), aside copy
+    # second, marker last (a stray marker is cleared by the next run's
+    # pre-clean).
     os.remove(os.path.join(old, sentinel))
     shutil.rmtree(old)
     os.remove(os.path.join(path, committed))
@@ -1201,11 +1237,9 @@ def append_to_ivf_index(batch: DataFrame, path: str) -> None:
     layout is no longer build(source)), appends are at-least-once under
     foreachBatch replay (probes dedup on (query, vector) after scoring;
     :func:`compact_ivf_index` sheds duplicate rows from storage)."""
-    meta = _read_meta(path)
     # src drops BEFORE the append — same crash-window rationale as
     # append_to_lsh_index.
-    if meta.pop("src", None) is not None:
-        _write_meta(path, meta)
+    meta = _drop_src_fingerprint(os.path.join(path, "_ann_meta.json"))
     qv_sql = f"transform(`{meta['vec_col']}`, x -> CAST(x AS DOUBLE))"
     nearest = _nearest_centroids(qv_sql, _centroids_sql(meta["centroids"]), 1)
     (
@@ -1374,12 +1408,14 @@ def index_stats(path: str) -> dict:
         kind = meta.get("kind", "pq")
         live = os.path.join(path, "codes")
     elif os.path.exists(os.path.join(path, "_dedup_meta.json")):
+        from map_reduce_framework_using_python_spark.operators.dedup_index import (
+            _LIVE_SUB,
+        )
+
         with open(os.path.join(path, "_dedup_meta.json")) as fh:
             meta = json.load(fh)
         kind = meta.get("kind", "minhash")
-        live = os.path.join(
-            path, "buckets" if kind == "minhash" else "digests"
-        )
+        live = os.path.join(path, _LIVE_SUB[kind])
     else:
         raise ValueError(f"not a recognized index layout: {path}")
     n_dirs = n_files = data_bytes = 0

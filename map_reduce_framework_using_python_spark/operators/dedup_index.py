@@ -44,12 +44,20 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from map_reduce_framework_using_python_spark.operators.ann_index import (
+    TOMBSTONE_DIR,
+    _apply_tombstones,
+    _compact_partitioned_index,
+    _drop_src_fingerprint,
+    _tombstone_frame,
+)
 from map_reduce_framework_using_python_spark.operators.dedup import (
     band_table,
     minhash_signatures,
     shingle_jaccard,
     word_shingles,
 )
+from map_reduce_framework_using_python_spark.sources.io import write_json_atomic
 
 
 def _require_bigint_id(df: DataFrame, id_col: str, what: str) -> None:
@@ -68,30 +76,15 @@ def _require_bigint_id(df: DataFrame, id_col: str, what: str) -> None:
 
 
 def _write_meta(path: str, meta: dict) -> None:
-    # temp + os.replace via the shared helper: _drop_src_fingerprint runs
-    # on every first append / compaction recovery, and a crash mid-dump
-    # must not truncate the meta (which would make every later
-    # read_meta/probe/append raise instead of recover — r7 advice).
-    from map_reduce_framework_using_python_spark.sources.io import write_json_atomic
-
+    # temp + os.replace: a crash mid-dump must not truncate the meta
+    # (which would make every later read_meta/probe/append raise
+    # instead of recover — r7 advice).
     write_json_atomic(os.path.join(path, "_dedup_meta.json"), meta)
 
 
 def read_meta(path: str) -> dict:
     with open(os.path.join(path, "_dedup_meta.json")) as fh:
         return json.load(fh)
-
-
-def _drop_src_fingerprint(path: str) -> None:
-    """A mutated index is no longer a pristine build(source): drop the
-    'src' fingerprint cache-reuse callers key on
-    (northstar._ensure_dedup_index, pipeline8._ensure_paragraph_index),
-    so they rebuild instead of serving the mutated layout as
-    build(corpus) — the same invariant the ANN appends/recovery keep
-    (ann_index.append_to_lsh_index et al.)."""
-    meta = read_meta(path)
-    if meta.pop("src", None) is not None:
-        _write_meta(path, meta)
 
 
 #: Live-layout subdirectory per index kind (None = the MinHash band
@@ -129,10 +122,6 @@ def retract_docs_from_index(ids, path: str, spark: SparkSession | None = None) -
     the index's id column), or a plain list/tuple (requires
     ``spark``). Retraction follows the append QUIESCENCE rule during
     compaction — the swap guard snapshots tombstone files too."""
-    from map_reduce_framework_using_python_spark.operators.ann_index import (
-        TOMBSTONE_DIR,
-    )
-
     meta = read_meta(path)
     if "witness_cap" in meta:
         raise ValueError(
@@ -146,15 +135,11 @@ def retract_docs_from_index(ids, path: str, spark: SparkSession | None = None) -
     kind = meta.get("kind")
     id_col = meta["id_col"] if kind in (None, "minhash") else "doc_id"
     live = os.path.join(path, _LIVE_SUB[kind])
-    _drop_src_fingerprint(path)
+    _drop_src_fingerprint(os.path.join(path, "_dedup_meta.json"))
     if not isinstance(ids, DataFrame):
         if spark is None:
             raise ValueError("retract_docs_from_index: a plain id list needs spark=")
         ids = spark.createDataFrame([(int(i),) for i in ids], f"{id_col} bigint")
-    from map_reduce_framework_using_python_spark.operators.ann_index import (
-        _tombstone_frame,
-    )
-
     # coalesce(1): one log file per retract call, not one per input
     # partition (r14 — the delete_from_index rule; see its comment).
     _tombstone_frame(ids, id_col, "retract_docs_from_index").coalesce(
@@ -168,10 +153,6 @@ def _live_rows(idx: DataFrame, path: str, kind_key, id_col: str) -> DataFrame:
     so a retracted doc can never influence a verdict or survive into a
     derived layout. A no-op (the unchanged plan) on retraction-free
     indexes."""
-    from map_reduce_framework_using_python_spark.operators.ann_index import (
-        _apply_tombstones,
-    )
-
     return _apply_tombstones(
         idx, os.path.join(path, _LIVE_SUB[kind_key]), id_col
     )
@@ -241,7 +222,7 @@ def append_to_index(
     buckets.write.mode("append").partitionBy("band").parquet(
         os.path.join(path, "buckets")
     )
-    _drop_src_fingerprint(path)
+    _drop_src_fingerprint(os.path.join(path, "_dedup_meta.json"))
 
 
 def prune_index_witnesses(
@@ -312,182 +293,6 @@ def prune_index_witnesses(
     return out_path
 
 
-def _swap_compact(
-    spark: SparkSession,
-    index_path: str,
-    live: str,
-    part_col: str,
-    schema: str,
-    write_partitions: int,
-    opname: str,
-    _test_hook_pre_swap=None,
-) -> None:
-    """The shared compaction swap machine (one copy, not three — the
-    round-7 review caught the ANN/bucket/paragraph copies drifting):
-    rewrite ``live``'s ``part_col``-partitioned layout into one file
-    per partition via a side directory and a two-rename swap with the
-    full crash/race protocol:
-
-    - a ``_data_files`` snapshot taken before the rewrite is re-checked
-      after the rewrite AND after the rename-aside, so a part file
-      appended anywhere in the window aborts the swap (rolled back,
-      appended file kept live) instead of dying in ``__old``;
-    - a ``_swap_pending`` sentinel travels with the aside copy so
-      recovery always RESTORES the complete copy (folding in any data
-      files a racing appender landed in a recreated live dir — and
-      dropping the 'src' cache fingerprint when it does, since the
-      restored index is no longer build(corpus));
-    - a ``_swap_committed`` marker riding the final rename makes a
-      crash in the retire sequence self-describing, so recovery deletes
-      the stale aside copy instead of re-merging it — no crash ordering
-      loses OR duplicates rows;
-    - the rewrite applies ``dropDuplicates`` so exact duplicates from
-      replayed at-least-once appends or a pre-marker re-merge heal.
-
-    Appends should still be quiesced — the guards do not license
-    concurrency."""
-    import shutil
-
-    tmp = live + "__compact"
-    old = live + "__old"
-    sentinel = "_swap_pending"
-    committed = "_swap_committed"
-
-    from map_reduce_framework_using_python_spark.operators.ann_index import (
-        TOMBSTONE_DIR,
-        _has_tombstones,
-    )
-
-    def _data_files(base: str) -> set[str]:
-        # Tombstone part files (retract_docs_from_index) are part of
-        # the snapshot: a retraction landing mid-compaction must abort
-        # the swap exactly like an append — the tmp rewrite carries no
-        # tombstones, so a missed one would silently RESURRECT its
-        # instance rows.
-        out = set()
-        tdir = os.path.join(base, TOMBSTONE_DIR)
-        if os.path.isdir(tdir):
-            out |= {
-                f"{TOMBSTONE_DIR}/{f}"
-                for f in os.listdir(tdir)
-                if f.endswith(".parquet")
-            }
-        for d in os.listdir(base):
-            if d.startswith(f"{part_col}="):
-                for f in os.listdir(os.path.join(base, d)):
-                    if f.endswith(".parquet"):
-                        out.add(f"{d}/{f}")
-        return out
-
-    def _merge_tree(src: str, dst: str) -> int:
-        # Fold data files from src into dst (count returned), skipping
-        # hidden/metadata files and uniquifying on (unlikely)
-        # collisions — the ann_index._compact_partitioned_index rules.
-        moved = 0
-        for root, _dirs, files in os.walk(src):
-            rel = os.path.relpath(root, src)
-            out_dir = dst if rel == "." else os.path.join(dst, rel)
-            os.makedirs(out_dir, exist_ok=True)
-            for f in files:
-                if f.startswith(("_", ".")):
-                    continue
-                target = os.path.join(out_dir, f)
-                i = 0
-                while os.path.exists(target):
-                    i += 1
-                    target = os.path.join(out_dir, f"racer{i}-{f}")
-                os.rename(os.path.join(root, f), target)
-                moved += 1
-        return moved
-
-    if os.path.isdir(old) and os.path.exists(os.path.join(old, sentinel)):
-        if os.path.isdir(live) and os.path.exists(os.path.join(live, committed)):
-            # Final rename committed; crash hit the retire window — the
-            # aside copy is stale, drop it (re-merging would duplicate
-            # every row).
-            shutil.rmtree(old)
-            os.remove(os.path.join(live, committed))
-        else:
-            folded = 0
-            if os.path.isdir(live):
-                folded = _merge_tree(live, old)
-                shutil.rmtree(live)
-            os.remove(os.path.join(old, sentinel))
-            os.rename(old, live)
-            if folded:
-                _drop_src_fingerprint(index_path)
-    elif not os.path.isdir(live) and os.path.isdir(old):
-        os.rename(old, live)  # pre-sentinel crash shape: roll back
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(os.path.join(live, committed)):
-        os.remove(os.path.join(live, committed))  # stray marker: benign
-    snapshot = _data_files(live)
-    rows = spark.read.schema(schema).parquet(live).dropDuplicates()
-    if _has_tombstones(live):
-        # Physical purge of retracted docs: the rewrite drops their
-        # instance rows, and since tmp carries no _tombstones dir, the
-        # committed swap retires the retraction log atomically — after
-        # this, the layout holds exactly build(corpus minus retracted).
-        ts = spark.read.parquet(os.path.join(live, TOMBSTONE_DIR))
-        rows = rows.join(
-            F.broadcast(ts.select(ts.columns[0]).distinct()),
-            ts.columns[0], "left_anti",
-        )
-    (
-        rows
-        .repartition(write_partitions, part_col)
-        .write.mode("overwrite")
-        .partitionBy(part_col)
-        .parquet(tmp)
-    )
-    if _data_files(live) != snapshot:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise RuntimeError(
-            f"{opname}: index changed during compaction "
-            "(concurrent append?) — quiesce appends and re-run"
-        )
-    if _test_hook_pre_swap is not None:
-        # Test seam (tests/test_dedup_retract.py): the window between
-        # the listing re-check and the rename-aside — exactly what the
-        # second check below exists for.
-        _test_hook_pre_swap()
-    open(os.path.join(live, sentinel), "w").close()
-    os.rename(live, old)
-    # Check-then-act closure: a part file that landed between the check
-    # above and the rename-aside is now sitting in __old — detect it,
-    # roll the rename back (the landed file stays live), abort.
-    if _data_files(old) != snapshot:
-        os.rename(old, live)
-        os.remove(os.path.join(live, sentinel))
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise RuntimeError(
-            f"{opname}: append landed during the swap window — "
-            "rolled back; quiesce appends and re-run"
-        )
-    open(os.path.join(tmp, committed), "w").close()
-    try:
-        os.rename(tmp, live)
-    except OSError:
-        folded = _merge_tree(live, old)
-        shutil.rmtree(live, ignore_errors=True)
-        os.remove(os.path.join(old, sentinel))
-        os.rename(old, live)
-        if folded:
-            _drop_src_fingerprint(index_path)
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise RuntimeError(
-            f"{opname}: live dir was recreated during the swap "
-            "window — rolled back with the racer's files preserved; "
-            "quiesce appends and re-run"
-        )
-    # Retire order mirrors the ANN compactor: sentinel, aside copy,
-    # marker — a crash at any point recovers without re-merging.
-    os.remove(os.path.join(old, sentinel))
-    shutil.rmtree(old)
-    os.remove(os.path.join(live, committed))
-
-
 def compact_index(spark: SparkSession, path: str, write_partitions: int = 8) -> None:
     """Rewrite the bucket layout into ONE file per band — the
     small-file remedy for an index that has absorbed many streamed
@@ -497,16 +302,13 @@ def compact_index(spark: SparkSession, path: str, write_partitions: int = 8) -> 
     band in exactly one task (``write_partitions`` only caps write
     parallelism), so each band directory comes out as a single file.
     Content is SET-equivalent, not byte-identical (dropDuplicates).
-    Crash/race protocol: see :func:`_swap_compact`."""
+    Crash/race protocol: see :func:`.ann_index._compact_partitioned_index`."""
     meta = read_meta(path)
-    _swap_compact(
-        spark,
-        path,
-        os.path.join(path, "buckets"),
-        "band",
-        f"{meta['id_col']} BIGINT, key BIGINT, band INT",
-        write_partitions,
-        "compact_index",
+    _compact_partitioned_index(
+        spark, os.path.join(path, "buckets"), "band", write_partitions,
+        None, "compact_index",
+        schema=f"{meta['id_col']} BIGINT, key BIGINT, band INT",
+        meta_file=os.path.join(path, "_dedup_meta.json"),
     )
 
 
@@ -798,7 +600,7 @@ def append_paragraphs_to_index(
         .partitionBy("pb")
         .parquet(os.path.join(path, "digests"))
     )
-    _drop_src_fingerprint(path)
+    _drop_src_fingerprint(os.path.join(path, "_dedup_meta.json"))
 
 
 def incremental_paragraph_stats(
@@ -885,19 +687,15 @@ def compact_paragraph_index(
     """One file per pb directory + exact-duplicate shedding for the
     paragraph layout (a replayed append's instance rows are exact
     duplicates by construction, so dropDuplicates is the correct heal).
-    Crash/race protocol: see :func:`_swap_compact`."""
+    Crash/race protocol: see :func:`.ann_index._compact_partitioned_index`."""
     meta = read_meta(path)
     if meta.get("kind") != "paragraph":
         raise ValueError(f"not a paragraph index: {meta.get('kind')!r}")
-    _swap_compact(
-        spark,
-        path,
-        os.path.join(path, "digests"),
-        "pb",
-        "doc_id BIGINT, g BIGINT, h STRING, pb INT",
-        write_partitions,
-        "compact_paragraph_index",
-        _test_hook_pre_swap=_test_hook_pre_swap,
+    _compact_partitioned_index(
+        spark, os.path.join(path, "digests"), "pb", write_partitions,
+        _test_hook_pre_swap, "compact_paragraph_index",
+        schema="doc_id BIGINT, g BIGINT, h STRING, pb INT",
+        meta_file=os.path.join(path, "_dedup_meta.json"),
     )
 
 
@@ -1160,7 +958,7 @@ def append_shingles_to_index(
         .partitionBy("pb")
         .parquet(os.path.join(path, "digests"))
     )
-    _drop_src_fingerprint(path)
+    _drop_src_fingerprint(os.path.join(path, "_dedup_meta.json"))
 
 
 def _read_shingle_index(
@@ -1334,16 +1132,13 @@ def compact_shingle_index(
 ) -> None:
     """One file per pb directory + exact-duplicate shedding (a replayed
     append's instance rows are exact duplicates by construction).
-    Crash/race protocol: see :func:`_swap_compact`."""
+    Crash/race protocol: see :func:`.ann_index._compact_partitioned_index`."""
     meta = read_meta(path)
     if meta.get("kind") != "shingle":
         raise ValueError(f"not a shingle index: {meta.get('kind')!r}")
-    _swap_compact(
-        spark,
-        path,
-        os.path.join(path, "digests"),
-        "pb",
-        _SHINGLE_IDX_SCHEMA[meta["digest"]],
-        write_partitions,
-        "compact_shingle_index",
+    _compact_partitioned_index(
+        spark, os.path.join(path, "digests"), "pb", write_partitions,
+        None, "compact_shingle_index",
+        schema=_SHINGLE_IDX_SCHEMA[meta["digest"]],
+        meta_file=os.path.join(path, "_dedup_meta.json"),
     )

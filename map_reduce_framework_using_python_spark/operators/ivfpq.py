@@ -68,6 +68,7 @@ from map_reduce_framework_using_python_spark.operators.ann_index import (
     _centroids_sql,
     _compact_partitioned_index,
     _dist_structs,
+    _drop_src_fingerprint,
     _nearest_centroids,
     _parquet_rows_under,
     _read_meta,
@@ -1084,9 +1085,8 @@ def append_to_ivfpq_index(batch: DataFrame, path: str) -> None:
     BEFORE the parquet append (fail-safe crash window), replayed
     batches leave exact-duplicate rows that every probe collapses
     after scoring and :func:`compact_ivfpq_index` sheds from disk."""
-    meta = _ivfpq_meta(path)
-    if meta.pop("src", None) is not None:
-        _write_meta(path, meta)
+    _ivfpq_meta(path)  # kind check before any mutation
+    meta = _drop_src_fingerprint(os.path.join(path, "_ann_meta.json"))
     id_col, label_col = meta["id_col"], meta["label_col"]
     keys = [id_col] if label_col is None else [id_col, label_col]
     # The batch enters the SAME space the index was built in: normalized

@@ -39,6 +39,32 @@ def test_hamming_masks_enumerate_the_ball():
         )
 
 
+def test_write_meta_crash_mid_dump_keeps_previous_meta(tmp_path, monkeypatch):
+    """A crash while ``_ann_meta.json`` is rewritten must leave the
+    previous sidecar loadable, not a truncated file that fails every
+    later probe, append and compaction of the index."""
+    import json
+
+    from map_reduce_framework_using_python_spark.operators.ann_index import (
+        _read_meta,
+        _write_meta,
+    )
+
+    path = str(tmp_path / "idx")
+    before = {"kind": "ivf", "id_col": "vec_id", "src": {"table": "t"}}
+    _write_meta(path, before)
+
+    def dump_then_crash(obj, fh, *args, **kwargs):
+        fh.write('{"kind": "iv')
+        raise OSError("crash mid-dump")
+
+    monkeypatch.setattr(json, "dump", dump_then_crash)
+    with pytest.raises(OSError, match="crash mid-dump"):
+        _write_meta(path, {"kind": "ivf", "id_col": "vec_id"})
+    monkeypatch.undo()
+    assert _read_meta(path) == before
+
+
 def test_index_batch_probe_matches_per_query_indexed(spark, tmp_path):
     """Each q_id's rows (in rn order) must be EXACTLY the single-query
     lsh_topk_indexed answer — same ids, labels, cosines, same order."""

@@ -193,6 +193,28 @@ def test_empty_corpus_index_probes_to_zero_pairs(spark, tmp_path):
     assert out.count() == 0
 
 
+def test_empty_corpus_index_compacts_cleanly(spark, tmp_path):
+    """MinHash and paragraph indexes over an empty corpus have no
+    partition directories: compaction must read them with the fixed
+    schema (inference fails on the bare dir) and leave no side dir."""
+    import os
+
+    from map_reduce_framework_using_python_spark.operators.dedup_index import (
+        build_paragraph_index,
+        compact_paragraph_index,
+    )
+
+    empty = load_table(spark, SF_SMOKE, "documents").filter(F.lit(False))
+    mh = build_minhash_index(empty, str(tmp_path / "mh"), num_hashes=32, bands=16)
+    para = build_paragraph_index(empty, str(tmp_path / "para"))
+    compact_index(spark, mh)
+    compact_paragraph_index(spark, para)
+    for live in (os.path.join(mh, "buckets"), os.path.join(para, "digests")):
+        assert os.path.isdir(live)
+        assert not os.path.exists(live + "__old")
+        assert not os.path.exists(live + "__compact")
+
+
 def test_append_commutes_with_build(spark, tmp_path):
     """build(corpus) + append(batch) must contain exactly the bucket
     rows of build(corpus ∪ batch) — the band table is row-local."""

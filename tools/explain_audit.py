@@ -233,7 +233,11 @@ def audit(name: str, spark, sf_dir: str) -> str:
     tree = formatted.split("\n\n")[0]
     full = qe.executedPlan().toString()
     checks = []
-    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", formatted)
+    # Expression ids (``col#8209``) depend on how many plans the session
+    # analysed before, not on the plan: strip them from the check
+    # captures so a re-audit rewrites only lines whose plan changed.
+    no_ids = re.sub(r"#\d+", "", formatted)
+    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", no_ids)
     if any(p.strip() for p in pushed):
         checks.append(f"- predicate pushdown: `{[p for p in pushed if p.strip()][0][:90]}`")
     schemas = re.findall(r"ReadSchema: struct<([^>]*)>", formatted)
@@ -244,7 +248,7 @@ def audit(name: str, spark, sf_dir: str) -> str:
     n_smj = full.count("SortMergeJoin")
     if n_bhj or n_smj:
         checks.append(f"- joins: {n_bhj} broadcast-hash, {n_smj} sort-merge")
-    part_filters = re.findall(r"PartitionFilters: \[([^\]]+)\]", formatted)
+    part_filters = re.findall(r"PartitionFilters: \[([^\]]+)\]", no_ids)
     # "Real" pruning = at least one per-entry predicate that is not a
     # bare isnotnull(col) (r7 tools review: the old whole-capture
     # equality never matched real filter text, so the guard was dead).
