@@ -77,8 +77,10 @@ from map_reduce_framework_using_python_spark.operators.ann_index import (
 from map_reduce_framework_using_python_spark.operators.pq import (
     _books_row,
     _code_expr,
+    _fit_all,
+    _fit_books,
+    _lloyd_book_fits,
     _normalized,
-    pq_train,
 )
 from map_reduce_framework_using_python_spark.operators.similarity import (
     _as_double,
@@ -262,23 +264,21 @@ def build_ivfpq_index(
         dim = int(head["d"])
         if dim % m != 0:
             raise ValueError(f"build_ivfpq_index: dim {dim} not divisible by m {m}")
-        fit_src = vectors
         fit_vn = vn
         if fit_fraction is not None and fit_fraction < 1.0:
             keep = F.pmod(
                 F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(1_000_000)
             ) < F.lit(int(fit_fraction * 1_000_000))
-            fit_src = vectors.filter(keep)
             fit_vn = vn.filter(keep)
-        model = KMeans(
-            k=n_centroids, seed=seed, featuresCol="_features"
-        ).fit(fit_vn.withColumn("_features", array_to_vector(F.col("vn"))))
-        centroids = [[float(x) for x in c] for c in model.clusterCenters()]
-        if by_residual:
-            from map_reduce_framework_using_python_spark.operators.pq import (
-                _fit_books,
-            )
 
+        def fit_coarse() -> list[list[float]]:
+            model = KMeans(
+                k=n_centroids, seed=seed, featuresCol="_features"
+            ).fit(fit_vn.withColumn("_features", array_to_vector(F.col("vn"))))
+            return [[float(x) for x in c] for c in model.clusterCenters()]
+
+        if by_residual:
+            centroids = fit_coarse()
             books = _fit_books(
                 _residual_frame(
                     fit_vn.select(id_col, "vn"), centroids, id_col
@@ -286,9 +286,10 @@ def build_ivfpq_index(
                 m, k, seed, max_iter, opname="build_ivfpq_index(residual)",
             )
         else:
-            books = pq_train(
-                fit_src, m, k, seed, max_iter, vec_col=vec_col, id_col=id_col
-            )
+            # independent quantizers: the codebooks fit fit_vn's rows
+            # (pq_train's input, same partitions) beside the coarse fit
+            centroids, books = _fit_all([fit_coarse, lambda: _fit_books(
+                fit_vn.select(id_col, "vn"), m, k, seed, max_iter)])
         (
             _assign_and_encode(
                 vn, keys, centroids, books, by_residual=by_residual
@@ -354,19 +355,14 @@ def build_ivfpq_index_lloyd(
             f"build_ivfpq_index_lloyd: dim {dim} not divisible by m {m}"
         )
     sub = dim // m
-    _, coarse = kmeans_fit(
-        df, k=n_centroids, n_iter=n_iter, vec_col=vec_col, id_col=id_col
+    coarse, *books = _fit_all(
+        [lambda: kmeans_fit(
+            df, k=n_centroids, n_iter=n_iter, vec_col=vec_col, id_col=id_col
+        )[1]]
+        + _lloyd_book_fits(
+            df, _as_double(F.col(vec_col)), id_col, m, sub, k, n_iter_sub
+        )
     )
-    books = []
-    for j in range(m):
-        sliced = df.select(
-            F.col(id_col),
-            F.slice(_as_double(F.col(vec_col)), j * sub + 1, sub).alias("_sub"),
-        )
-        _, cents = kmeans_fit(
-            sliced, k=k, n_iter=n_iter_sub, vec_col="_sub", id_col=id_col
-        )
-        books.append(cents)
     vn = df.select(*keys, _as_double(F.col(vec_col)).alias("vn"))
     (
         _assign_and_encode(vn, keys, coarse, books)
@@ -450,13 +446,11 @@ def build_ivfpq_index_hier(
             raise ValueError(
                 f"build_ivfpq_index_hier: dim {dim} not divisible by m {m}"
             )
-        fit_src = vectors
         fit_vn = vn
         if fit_fraction is not None and fit_fraction < 1.0:
             keep = F.pmod(
                 F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(1_000_000)
             ) < F.lit(int(fit_fraction * 1_000_000))
-            fit_src = vectors.filter(keep)
             fit_vn = vn.filter(keep)
         def fit_level(frame: DataFrame, kk: int) -> list[list[float]]:
             if kk == 1:
@@ -474,12 +468,14 @@ def build_ivfpq_index_hier(
             )
             return [[float(x) for x in c] for c in model.clusterCenters()]
 
-        c1 = fit_level(fit_vn, n_cells_l1)
-        res = _residual_frame(fit_vn.select(id_col, "vn"), c1, id_col)
-        c2 = fit_level(res, n_cells_l2)
-        books = pq_train(
-            fit_src, m, k, seed, max_iter, vec_col=vec_col, id_col=id_col
-        )
+        def fit_levels() -> tuple[list[list[float]], list[list[float]]]:
+            c1 = fit_level(fit_vn, n_cells_l1)
+            res = _residual_frame(fit_vn.select(id_col, "vn"), c1, id_col)
+            return c1, fit_level(res, n_cells_l2)
+
+        # independent fits: the codebooks quantize fit_vn's rows, not residuals
+        (c1, c2), books = _fit_all([fit_levels, lambda: _fit_books(
+            fit_vn.select(id_col, "vn"), m, k, seed, max_iter)])
         hier = {
             "n_cells_l1": n_cells_l1, "n_cells_l2": n_cells_l2,
             "centroids_l1": c1, "centroids_l2": c2,
@@ -566,23 +562,21 @@ def build_ivfpq_index_hier_lloyd(
                 f"by m {m}"
             )
         sub = dim // m
-        _, c1 = kmeans_fit(
-            vn, k=n_cells_l1, n_iter=n_iter, vec_col="vn", id_col=id_col
-        )
-        res = _residual_frame(vn.select(id_col, "vn"), c1, id_col)
-        _, c2 = kmeans_fit(
-            res, k=n_cells_l2, n_iter=n_iter, vec_col="vn", id_col=id_col
-        )
-        books = []
-        for j in range(m):
-            sliced = vn.select(
-                F.col(id_col),
-                F.slice(F.col("vn"), j * sub + 1, sub).alias("_sub"),
+
+        def fit_levels() -> tuple[list[list[float]], list[list[float]]]:
+            _, c1 = kmeans_fit(
+                vn, k=n_cells_l1, n_iter=n_iter, vec_col="vn", id_col=id_col
             )
-            _, cents = kmeans_fit(
-                sliced, k=k, n_iter=n_iter_sub, vec_col="_sub", id_col=id_col
+            res = _residual_frame(vn.select(id_col, "vn"), c1, id_col)
+            _, c2 = kmeans_fit(
+                res, k=n_cells_l2, n_iter=n_iter, vec_col="vn", id_col=id_col
             )
-            books.append(cents)
+            return c1, c2
+
+        (c1, c2), *books = _fit_all(
+            [fit_levels]
+            + _lloyd_book_fits(vn, F.col("vn"), id_col, m, sub, k, n_iter_sub)
+        )
         hier = {
             "n_cells_l1": n_cells_l1, "n_cells_l2": n_cells_l2,
             "centroids_l1": c1, "centroids_l2": c2,

@@ -33,15 +33,54 @@ L2-normalized inside, where cosine order == negated squared-L2 order.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import partial
+from multiprocessing.pool import ThreadPool
+from typing import Callable
+
+from pyspark import inheritable_thread_target
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from map_reduce_framework_using_python_spark.operators.clustering import kmeans_fit
 from map_reduce_framework_using_python_spark.operators.similarity import (
     _as_double,
     _topk_tail,
     cosine_scores,
     l2_norm,
 )
+
+#: Quantizer fits in flight at once. Each fit (spark.ml or Lloyd) is
+#: a chain of small jobs whose driver-side turnaround leaves the
+#: executors idle between stages; concurrent fits fill those gaps
+#: (pyspark.ml.tuning's ``parallelism`` pattern).
+_FIT_THREADS = 8
+
+
+def _fit_all(fits: list[Callable]) -> list:
+    """Run independent, deterministic fits concurrently; results in
+    ``fits`` order, so every model equals its sequential fit."""
+    with ThreadPool(min(len(fits), _FIT_THREADS)) as pool:
+        return pool.map(
+            lambda fit: fit(), [inheritable_thread_target(f) for f in fits]
+        )
+
+
+def _lloyd_book_fits(
+    frame: DataFrame, vec: Column, id_col: str, m: int, sub: int, k: int, n_iter: int
+) -> list[Callable[[], list[list[float]]]]:
+    """The Lloyd twin of :func:`_fit_books`'s loop, as fits for
+    :func:`_fit_all`: one deterministic ``kmeans_fit`` chain per
+    ``sub``-wide slice of ``vec``."""
+
+    def fit(j: int) -> list[list[float]]:
+        sliced = frame.select(
+            F.col(id_col), F.slice(vec, j * sub + 1, sub).alias("_sub")
+        )
+        return kmeans_fit(
+            sliced, k=k, n_iter=n_iter, vec_col="_sub", id_col=id_col
+        )[1]
+
+    return [partial(fit, j) for j in range(m)]
 
 
 def _normalized(vectors: DataFrame, vec_col: str, id_col: str, label_col: str | None):
@@ -70,7 +109,8 @@ def _fit_books(
     """The codebook-fitting loop over a frame carrying a ``vn`` vector
     column (whatever space the caller chose: normalized vectors for
     flat PQ, coarse residuals for by-residual IVF-PQ): m bounded
-    spark.ml KMeans fits, one per dim/m-wide slice. Returned model
+    spark.ml KMeans fits, one per dim/m-wide slice, run concurrently
+    by :func:`_fit_all`. Returned model
     state is m×k×(dim/m) floats on the driver — the k-means centroid
     contract. dim must be divisible by m (fails loudly). The fixed
     per-slice seeds reproduce the codebooks only for the same input
@@ -89,8 +129,8 @@ def _fit_books(
         if dim % m != 0:
             raise ValueError(f"{opname}: dim {dim} not divisible by m {m}")
         sub = dim // m
-        books: list[list[list[float]]] = []
-        for j in range(m):
+
+        def fit(j: int) -> list[list[float]]:
             feats = vn.select(
                 array_to_vector(
                     F.expr(f"slice(vn, {j * sub + 1}, {sub})")
@@ -99,10 +139,9 @@ def _fit_books(
             model = KMeans(
                 k=k, seed=seed + j, maxIter=max_iter, featuresCol="features"
             ).fit(feats)
-            books.append(
-                [[float(x) for x in c] for c in model.clusterCenters()]
-            )
-        return books
+            return [[float(x) for x in c] for c in model.clusterCenters()]
+
+        return _fit_all([partial(fit, j) for j in range(m)])
     finally:
         vn.unpersist()
 
@@ -432,9 +471,6 @@ def pq_topk_lloyd(
     (:func:`pq_topk`) keeps its recall pins. Same output surface and
     tie-break as the other single-query probes (the shared
     ``_topk_tail`` with ``grid=True``)."""
-    from map_reduce_framework_using_python_spark.operators.clustering import (
-        kmeans_fit,
-    )
     from map_reduce_framework_using_python_spark.operators.similarity import (
         _query_vector,
     )
@@ -455,17 +491,9 @@ def pq_topk_lloyd(
                 f"pq_topk_lloyd: dim {dim} not divisible by m {m}"
             )
         sub = dim // m
-        books = []
-        for j in range(m):
-            sliced = vn.select(
-                F.col(id_col),
-                F.slice(F.col("vn"), j * sub + 1, sub).alias("_sub"),
-            )
-            _, cents = kmeans_fit(
-                sliced, k=n_centroids, n_iter=n_iter, vec_col="_sub",
-                id_col=id_col,
-            )
-            books.append(cents)
+        books = _fit_all(_lloyd_book_fits(
+            vn, F.col("vn"), id_col, m, sub, n_centroids, n_iter
+        ))
         codes = (
             vn.crossJoin(F.broadcast(_books_row(vectors, books)))
             # the ONE shared encode kernel (_code_expr — pq_encode and
